@@ -1,22 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, Encoder}
 
 /** Enrichment (SURVEY.md §2.2 O5 / §2.3 J3): geocoding-style lookup.
   *
-  * Deterministic mode — the default — is a dimension-table left join:
-  * reproducible, testable, oracle-friendly. Live mode wraps an
+  * Deterministic mode — the default — is a plain dimension-table left
+  * join (`df.join(broadcast(dim), keys, "left_outer")`): reproducible,
+  * testable, oracle-friendly. Live mode wraps an
   * external client in mapPartitions with a client-side rate limiter
   * (the reference hits Nominatim at 1 req/s; a 1000-task cluster
   * calling an external API needs the limiter INSIDE the task, and few
   * partitions for the side that calls out).
   */
 object Enrich {
-
-  /** J3: left join against an enrichment dimension. */
-  def byDimension(df: DataFrame, dim: DataFrame, keys: Seq[String]): DataFrame =
-    df.join(broadcast(dim), keys, "left_outer")
 
   /** Live mode: one client per partition, at most one call per
     * `minIntervalMs` within the partition. The lookup is applied

@@ -912,27 +912,34 @@ object MiscQueries {
         |  UNION ALL SELECT 'orphan_lineitems', n FROM orph
         |  UNION ALL SELECT 'ship_before_order', n FROM early)
         |ORDER BY check_name""".stripMargin) { (s, d) =>
-      import s.implicits._
       val li = Tables.lineitem(s, d)
       def cnt(c: org.apache.spark.sql.Column) = sum(when(c, 1L).otherwise(0L))
-      val row = li.agg(
-        cnt(col("l_orderkey").isNull).as("null_orderkey"),
-        cnt(col("l_quantity") <= 0).as("nonpositive_qty"),
-        cnt(col("l_discount") < 0 || col("l_discount") > 0.1).as("discount_range"),
-        cnt(col("l_quantity") > 45).as("qty_over_45"),
-        cnt(col("l_extendedprice") <= 0).as("nonpositive_price")).collect()(0)
+      val rules = Seq(
+        "null_orderkey" -> col("l_orderkey").isNull,
+        "nonpositive_qty" -> (col("l_quantity") <= 0),
+        "discount_range" -> (col("l_discount") < 0 || col("l_discount") > 0.1),
+        "qty_over_45" -> (col("l_quantity") > 45),
+        "nonpositive_price" -> (col("l_extendedprice") <= 0))
+      // the row rules: one aggregate row exploded to one row per rule
+      val rowRules = li.agg(array(rules.map { case (n, c) =>
+          struct(lit(n).as("check_name"), cnt(c).as("n_violations")) }: _*).as("r"))
+        .select(explode(col("r")).as("r")).select("r.*")
+      def audit(name: String, violations: org.apache.spark.sql.DataFrame) =
+        violations.agg(count(lit(1)).as("n_violations"))
+          .select(lit(name).as("check_name"), col("n_violations"))
       val dup = li.groupBy(col("l_orderkey"), col("l_linenumber"))
-        .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
+        .agg(count(lit(1)).as("c")).filter(col("c") > 1)
       val orph = li.join(Tables.orders(s, d),
-        col("l_orderkey") === col("o_orderkey"), "left_anti").count()
+        col("l_orderkey") === col("o_orderkey"), "left_anti")
       val early = li.join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_shipdate") < col("o_orderdate")).count()
-      Seq(
-        ("null_orderkey", row.getLong(0)), ("nonpositive_qty", row.getLong(1)),
-        ("discount_range", row.getLong(2)), ("qty_over_45", row.getLong(3)),
-        ("nonpositive_price", row.getLong(4)), ("dup_pk", dup),
-        ("orphan_lineitems", orph), ("ship_before_order", early))
-        .toDF("check_name", "n_violations").orderBy("check_name")
+        .filter(col("l_shipdate") < col("o_orderdate"))
+      // one lazy plan: the caller's single action runs all four
+      // branches' stages together instead of four jobs in a chain
+      rowRules
+        .unionByName(audit("dup_pk", dup))
+        .unionByName(audit("orphan_lineitems", orph))
+        .unionByName(audit("ship_before_order", early))
+        .orderBy("check_name")
     },
 
     // ---------------------------------------------------------------- q144

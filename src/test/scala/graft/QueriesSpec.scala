@@ -12,6 +12,33 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("q143 contract audit is one lazy plan: Q.run starts no job, rows equal the eager audit") {
+    import org.apache.spark.sql.functions._
+    val d = sf("sf0.001")
+    // the audit as four eager actions, the way q143 used to run it
+    val li = graft.sources.Tables.lineitem(spark, d)
+    val orders = graft.sources.Tables.orders(spark, d)
+    def cnt(c: org.apache.spark.sql.Column) = sum(when(c, 1L).otherwise(0L))
+    val row = li.agg(
+      cnt(col("l_orderkey").isNull), cnt(col("l_quantity") <= 0),
+      cnt(col("l_discount") < 0 || col("l_discount") > 0.1),
+      cnt(col("l_quantity") > 45), cnt(col("l_extendedprice") <= 0)).head
+    val eager = Seq(
+      "null_orderkey" -> row.getLong(0), "nonpositive_qty" -> row.getLong(1),
+      "discount_range" -> row.getLong(2), "qty_over_45" -> row.getLong(3),
+      "nonpositive_price" -> row.getLong(4),
+      "dup_pk" -> li.groupBy("l_orderkey", "l_linenumber").count()
+        .filter(col("count") > 1).count(),
+      "orphan_lineitems" -> li.join(orders, col("l_orderkey") === col("o_orderkey"),
+        "left_anti").count(),
+      "ship_before_order" -> li.join(orders, col("l_orderkey") === col("o_orderkey"))
+        .filter(col("l_shipdate") < col("o_orderdate")).count())
+      .sortBy(_._1)
+    val (plan, jobs) = jobsIn(SparkEntry.queries("q143_contract_audit")(spark, d))
+    assert(jobs == 0, s"Q.run started $jobs jobs")
+    assert(plan.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq == eager)
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

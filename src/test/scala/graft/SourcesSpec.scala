@@ -64,6 +64,84 @@ class SourcesSpec extends SparkSpec {
       "expected parquet reads through FakeObjectStoreFS")
   }
 
+  /** A fresh corpus dir holding a copy of sf0.001's `name` table, so
+    * its first read in the session is a schema-cache miss. */
+  private def freshCopy(name: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf("sf0.001"), s"$name.parquet"),
+      dir.resolve(s"$name.parquet"))
+    dir.toString
+  }
+
+  test("S6 schema cache: a repeated Tables read in one session starts zero Spark jobs") {
+    val d = freshCopy("lineitem")
+    val (first, inferJobs) = jobsIn(graft.sources.Tables.lineitem(spark, d))
+    val (again, jobs) = jobsIn(graft.sources.Tables.lineitem(spark, d))
+    assert(inferJobs > 0, "the first read infers the schema with a Spark job")
+    assert(jobs == 0, s"a cached read started $jobs jobs")
+    assert(again.schema == first.schema)
+    assert(again.count() == first.count() && again.count() > 0)
+  }
+
+  test("S6 schema cache: a table rewritten at the same path is re-inferred") {
+    val d = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    (1 to 5).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+      .write.parquet(s"$d/t.parquet")
+    assert(graft.sources.Tables(spark, d, "t").columns.toSeq == Seq("k", "v"))
+    assert(jobsIn(graft.sources.Tables(spark, d, "t"))._2 == 0)
+    (1 to 7).map(i => (i.toLong, s"v$i", i * 2.0)).toDF("k", "v", "extra")
+      .write.mode("overwrite").parquet(s"$d/t.parquet")
+    val (after, jobs) = jobsIn(graft.sources.Tables(spark, d, "t"))
+    assert(jobs > 0, "a rewritten table must be re-inferred")
+    assert(after.columns.toSeq == Seq("k", "v", "extra"))
+    assert(after.agg(sum($"extra")).head.getDouble(0) == 56.0)
+  }
+
+  test("S6 schema cache: a changed parquet conf forces a re-infer") {
+    val d = freshCopy("nation")
+    graft.sources.Tables.nation(spark, d)
+    assert(jobsIn(graft.sources.Tables.nation(spark, d))._2 == 0)
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val nanosBefore = spark.conf.get(nanos)
+    try {
+      spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+      assert(jobsIn(graft.sources.Tables.nation(spark, d))._2 > 0)
+      assert(jobsIn(graft.sources.Tables.nation(spark, d))._2 == 0)
+      spark.conf.set(nanos, (!nanosBefore.toBoolean).toString)
+      assert(jobsIn(graft.sources.Tables.nation(spark, d))._2 > 0)
+    } finally {
+      spark.conf.unset("spark.sql.parquet.binaryAsString")
+      spark.conf.set(nanos, nanosBefore)
+    }
+    // back to the original confs: the stamp differs from the last
+    // entry's, so this is a miss again, then a hit
+    assert(jobsIn(graft.sources.Tables.nation(spark, d))._2 > 0)
+    assert(jobsIn(graft.sources.Tables.nation(spark, d))._2 == 0)
+  }
+
+  test("S6 schema cache: spark.newSession() does not reuse the first session's entries") {
+    val d = freshCopy("region")
+    graft.sources.Tables.region(spark, d)
+    assert(jobsIn(graft.sources.Tables.region(spark, d))._2 == 0)
+    val other = spark.newSession()
+    val (df, jobs) = jobsIn(graft.sources.Tables.region(other, d))
+    assert(jobs > 0, "a new session must infer for itself")
+    assert(df.count() == graft.sources.Tables.region(spark, d).count())
+  }
+
+  test("S6 schema cache: two cached reads of one table self-join as two plain reads do") {
+    val d = sf("sf0.001")
+    graft.sources.Tables.orders(spark, d)
+    def pairs(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.join(b, a("o_custkey") === b("o_custkey") && a("o_orderkey") < b("o_orderkey"))
+        .select(a("o_orderkey"), b("o_orderkey"))
+    val cached = pairs(graft.sources.Tables.orders(spark, d), graft.sources.Tables.orders(spark, d))
+    val plain = pairs(spark.read.parquet(s"$d/orders.parquet"),
+      spark.read.parquet(s"$d/orders.parquet"))
+    assert(cached.count() == plain.count() && cached.count() > 0)
+    assert(cached.exceptAll(plain).count() == 0 && plain.exceptAll(cached).count() == 0)
+  }
+
   test("object-store attach path: fs.s3a.impl wiring round-trips a WRITE + READ on s3a://") {
     // The production attach recipe is exactly two moves: hadoop-aws on
     // the classpath and `fs.s3a.impl` (+ credentials) in the Hadoop

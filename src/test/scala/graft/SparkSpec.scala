@@ -14,6 +14,32 @@ trait SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
 
+  /** Runs `body` and counts the Spark jobs it started from this
+    * thread. Jobs are matched by a local property set for the call,
+    * so work still running from earlier tests (streams, pool
+    * threads) is not counted; the listener bus is flushed before the
+    * count is read. */
+  def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(SparkSpec.JobTag) == tag)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty(SparkSpec.JobTag, tag)
+    try {
+      val out = body
+      org.apache.spark.graftbridge.ListenerBridge.flush(sc)
+      (out, n.get)
+    } finally {
+      sc.setLocalProperty(SparkSpec.JobTag, null)
+      sc.removeSparkListener(l)
+    }
+  }
+
   override protected def afterAll(): Unit = {
     if (SparkSpec.started) graft.analytics.Similarity.releaseRetained(SparkSpec.session)
     super.afterAll()
@@ -21,6 +47,7 @@ trait SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  private val JobTag = "graft.test.jobTag"
   @volatile private var started = false
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
