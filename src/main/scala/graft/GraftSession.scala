@@ -27,4 +27,6 @@ object GraftSession {
       // + Tables.events normalizes to micros
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // a collected root ORDER BY sorts on the driver (plans.CollectSort)
+      .withExtensions(_.injectQueryStagePrepRule(_ => graft.plans.CollectSort))
 }

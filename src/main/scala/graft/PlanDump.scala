@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps `explain formatted` for named declared queries to
@@ -15,12 +14,10 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: PlanDump <dir> <tag> <q1,q2,...>")
     val Array(dir, tag, names) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    // the shipped factory (so a dump shows the plan collect-driven
+    // callers execute, CollectSort root included) + Bench's codegen cache
+    val spark = GraftSession.builder("local[4]", 4)
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val out = Paths.get(s"plans/$dir")

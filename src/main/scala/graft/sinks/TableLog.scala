@@ -5,7 +5,7 @@ import java.util.Locale
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** Transactional MULTI-file table commits on a plain parquet
   * directory — the mechanism the reference's read-merge-overwrite
@@ -116,6 +116,17 @@ object TableLog {
     * rows are a superset of every older sidecar's — reading the union
     * of all referenced sidecars is always exact. */
   final case class DvRef(path: String, card: Long)
+
+  /** A DV sidecar's schema: the deleted positions as (data file name,
+    * row index) — what [[deleteVectors]] writes. */
+  private val DvSchema = StructType(Seq(
+    StructField("f", StringType),
+    StructField("r", LongType)))
+
+  /** The union of the DV sidecars at `rels` (table-relative), read with
+    * [[DvSchema]] so no footer is inferred. */
+  private def readSidecars(spark: SparkSession, table: String, rels: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(rels.distinct.map(rel => new Path(table, rel).toString): _*)
 
   /** A checkpoint (full-snapshot sidecar) is written after every this
     * many consecutive delta commits — bounds the reconstruction walk
@@ -264,14 +275,16 @@ object TableLog {
     * The files are uncommitted at this point, so a violation abort
     * leaves only orphans (crashed-writer invisibility already covers
     * that), and fresh files carry no deletion vectors, so the raw
-    * read is DV-sound (the readFiles seam is for COMMITTED files). */
+    * read is DV-sound (the readFiles seam is for COMMITTED files).
+    * The files are read with `written`, the schema of the frame that
+    * wrote them, so the re-read infers nothing from their footers. */
   private def enforceConstraintsOnFiles(spark: SparkSession, table: String,
-                                        files: Seq[String],
+                                        files: Seq[String], written: StructType,
                                         cs: Map[String, String], verb: String,
                                         schema: Option[StructType]): Unit =
     if (cs.nonEmpty && files.nonEmpty)
       enforceConstraints(
-        spark.read.parquet(files.map(f => new Path(table, f).toString): _*),
+        spark.read.schema(written).parquet(files.map(f => new Path(table, f).toString): _*),
         cs, verb, table, schema)
 
   /** ADD a named CHECK constraint (Delta's `ALTER TABLE … ADD
@@ -632,16 +645,15 @@ object TableLog {
     val withDv = files.filter(m.dvs.contains)
     if (withDv.isEmpty) return if (keepPos) tag(scan(files)) else scan(files)
     val plain = files.filterNot(m.dvs.contains)
-    val dvPaths = withDv.map(f => m.dvs(f).path).distinct
-      .map(rel => new Path(table, rel).toString)
+    val dvRels = withDv.map(f => m.dvs(f).path).distinct
     // no name filter needed for CORRECTNESS: a position row of a file
     // OUTSIDE this scan matches nothing in it (names are
     // write-UUID-unique); the broadcast bound is therefore on the
     // sidecar files' PHYSICAL bytes — what the union actually reads
-    val dv0 = spark.read.parquet(dvPaths: _*)
+    val dv0 = readSidecars(spark, table, dvRels)
     val fsys = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dvBytes = dvPaths.map(p =>
-      try fsys.getFileStatus(new Path(p)).getLen
+    val dvBytes = dvRels.map(rel =>
+      try fsys.getFileStatus(new Path(table, rel)).getLen
       catch { case scala.util.control.NonFatal(_) => Long.MaxValue / 1024 }).sum
     val dv = if (dvBytes <= DV_BROADCAST_BYTES) broadcast(dv0) else dv0
     val base = scan(withDv)
@@ -1067,7 +1079,7 @@ object TableLog {
     def ensureConstraints(m: Option[Manifest]): Unit = {
       val cs = m.map(_.constraints).getOrElse(Map.empty[String, String])
       if (!enforcedCs.contains(cs)) {
-        enforceConstraintsOnFiles(spark, table, newFiles, cs, "append",
+        enforceConstraintsOnFiles(spark, table, newFiles, df.schema, cs, "append",
           m.flatMap(_.schema))
         enforcedCs = Some(cs)
       }
@@ -1121,7 +1133,7 @@ object TableLog {
     def ensureConstraints(m: Option[Manifest]): Unit = {
       val cs = m.map(_.constraints).getOrElse(Map.empty[String, String])
       if (!enforcedCs.contains(cs)) {
-        enforceConstraintsOnFiles(spark, table, newFiles, cs, "overwrite",
+        enforceConstraintsOnFiles(spark, table, newFiles, df.schema, cs, "overwrite",
           m.flatMap(_.schema))
         enforcedCs = Some(cs)
       }
@@ -1405,7 +1417,7 @@ object TableLog {
     def ensureConstraints(m: Option[Manifest]): Unit = {
       val cs = m.map(_.constraints).getOrElse(Map.empty[String, String])
       if (!enforcedCs.contains(cs)) {
-        enforceConstraintsOnFiles(spark, table, newFiles, cs,
+        enforceConstraintsOnFiles(spark, table, newFiles, df.schema, cs,
           "appendStreamBatch", m.flatMap(_.schema))
         enforcedCs = Some(cs)
       }
@@ -1469,7 +1481,7 @@ object TableLog {
       // non-determinism soundness net over what actually commits.
       enforceConstraints(fresh, cs, "upsert", table, m.flatMap(_.schema))
       val (newFiles, newStats) = writeData(merged, table)
-      enforceConstraintsOnFiles(spark, table, newFiles, cs, "upsert",
+      enforceConstraintsOnFiles(spark, table, newFiles, merged.schema, cs, "upsert",
         m.flatMap(_.schema))
       if (tryCommitFull(spark, table, base, "merge", newFiles,
           m.map(_.txns).getOrElse(Map.empty), newStats,
@@ -1707,7 +1719,7 @@ object TableLog {
       // post-apply rows must satisfy the contract (carried rows pass
       // by induction; the scan is touched-sized) — checked against
       // the WRITTEN files, the enforceConstraintsOnFiles contract
-      enforceConstraintsOnFiles(spark, table, rawFiles, m.constraints,
+      enforceConstraintsOnFiles(spark, table, rawFiles, applied.schema, m.constraints,
         "merge", None)
       // writeData's keep-one empty is only needed when NOTHING else
       // survives — with carried files present, drop it (bytes too);
@@ -1948,9 +1960,7 @@ object TableLog {
           val oldPaths = dvF.flatMap(f => m.dvs.get(f).map(_.path)).distinct
           val all =
             if (oldPaths.isEmpty) fresh
-            else fresh.unionByName(
-              spark.read.parquet(
-                  oldPaths.map(rel => new Path(table, rel).toString): _*)
+            else fresh.unionByName(readSidecars(spark, table, oldPaths)
                 .where(col("f").isin(dvNames: _*))).distinct()
           val (rels, _) = writeData(all.coalesce(1), table)
           val cards = all.groupBy(col("f")).count().collect()
@@ -2280,8 +2290,7 @@ object TableLog {
             val names = grown.map(baseName)
             def posns(refs: Seq[DvRef]): Option[DataFrame] =
               if (refs.isEmpty) None
-              else Some(spark.read.parquet(refs.map(d =>
-                  new Path(table, d.path).toString).distinct: _*)
+              else Some(readSidecars(spark, table, refs.map(_.path))
                 .where(col("f").isin(names: _*)))
             val newPos = posns(grown.map(cur.dvs(_))).get
             val oldPos = posns(grown.flatMap(f => prev.flatMap(_.dvs.get(f))))

@@ -43,6 +43,20 @@ class ConstraintsSpec extends SparkSpec {
     assert(TableLog.read(spark, t).count() == 12)
   }
 
+  test("enforcement re-reads the written files with the batch's schema, inferring none") {
+    val plain = tmpTable()
+    val checked = tmpTable()
+    TableLog.append(batch(0 until 10), plain)
+    TableLog.append(batch(0 until 10), checked)
+    TableLog.addConstraint(spark, checked, "id_nonneg", "id >= 0")
+    val (_, plainJobs) = jobsIn(TableLog.append(batch(10 until 20), plain))
+    val (_, checkedJobs) = jobsIn(TableLog.append(batch(10 until 20), checked))
+    // the enforcement scan alone (limit(1).count: a map and a result
+    // job); inferring the written files' schema was a third
+    assert(checkedJobs - plainJobs == 2, s"plain $plainJobs, constrained $checkedJobs")
+    assert(TableLog.read(spark, checked).count() == 20)
+  }
+
   test("NULL passes a CHECK (SQL-standard UNKNOWN); IS NOT NULL rejects it") {
     val t = tmpTable()
     TableLog.append(batch(0 until 3), t)

@@ -50,15 +50,11 @@ object SparkSpec {
   private val JobTag = "graft.test.jobTag"
   @volatile private var started = false
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // the shipped factory, so every suite runs with its rules
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     started = true

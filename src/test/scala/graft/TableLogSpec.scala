@@ -1562,6 +1562,17 @@ class TableLogSpec extends SparkSpec {
     assert(ids(TableLog.read(spark, t, Some(2))) == (0L until 800L))
   }
 
+  test("deleteVectors: a DV'd read reads its sidecars with their known schema, starting no job") {
+    val t = tmpTable()
+    TableLog.append(batch(0 until 200).repartition(2), t)
+    TableLog.deleteVectors(spark, t, $"id" % 10 === 3, maxDvFraction = 1.0)
+    assert(TableLog.manifest(spark, t).dvs.nonEmpty)
+    // inferring the sidecars' footers was one job
+    val (df, jobs) = jobsIn(TableLog.read(spark, t))
+    assert(jobs == 0, s"building the read started $jobs jobs")
+    assert(ids(df) == (0L until 200L).filterNot(_ % 10 == 3))
+  }
+
   test("deleteVectors: per-file auto decision — scattered gets sidecars, dense rewrites, fully-dead drops; compact materializes") {
     val t = tmpTable()
     TableLog.append(batch(0 until 100).coalesce(1), t) // 10% match: sidecar
