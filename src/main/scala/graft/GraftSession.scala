@@ -27,6 +27,11 @@ object GraftSession {
       // + Tables.events normalizes to micros
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // a collected root ORDER BY sorts on the driver (plans.CollectSort)
-      .withExtensions(_.injectQueryStagePrepRule(_ => graft.plans.CollectSort))
+      // a collected root ORDER BY sorts on the driver (plans.CollectSort);
+      // a bare count of a TableLog snapshot reads the manifest
+      // (plans.MetadataCount)
+      .withExtensions { e =>
+        e.injectQueryStagePrepRule(_ => graft.plans.CollectSort)
+        e.injectOptimizerRule(_ => graft.plans.MetadataCount)
+      }
 }

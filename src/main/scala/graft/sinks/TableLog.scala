@@ -83,7 +83,10 @@ object TableLog {
     * recorded at COMMIT time, the Delta data-skipping mechanism:
     * [[readWhere]] prunes the file list against a predicate BEFORE
     * the scan exists. Files committed by pre-stats manifests simply
-    * have no entry (never pruned) — old tables stay readable.
+    * have no entry (never pruned) — old tables stay readable. The
+    * footer `rows` serve pruning and, through [[exactRows]],
+    * [[detail]]'s `n_rows` and [[graft.plans.MetadataCount]] (a bare
+    * `count()` of a read is answered from them, no scan).
     *
     * `schema` is the table's committed schema (the Delta
     * schema-in-log mechanism): commits ENFORCE it — an append whose
@@ -621,9 +624,9 @@ object TableLog {
     * delete's rewrite / readChanges' pre/postimages) goes through, so
     * merge-on-read correctness has a single seam.
     *
-    * Mechanism: files without a DV scan exactly as before (zero
-    * overhead — the common case stays the engine's vectorized parquet
-    * path untouched); files WITH a DV scan with the parquet metadata
+    * Mechanism: files without a DV scan as a [[ManifestFileIndex]]
+    * listing (zero overhead — the common case stays the engine's
+    * vectorized parquet path); files WITH a DV scan with the parquet metadata
     * columns (`_metadata.file_name`, `_metadata.row_index` — stable
     * per-file row positions, the substrate Delta's DVs key on) and
     * anti-join the union of their referenced position sidecars.
@@ -637,8 +640,11 @@ object TableLog {
   private def readFiles(spark: SparkSession, table: String, m: Manifest,
                         files: Seq[String], keepPos: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
+    // DV-free files: the manifest's listing as the scan's file index,
+    // so the plan carries (m, files) — stats pruning on pushed
+    // filters, and plans.MetadataCount's exact count
     def scan(fs: Seq[String]) =
-      reader(spark, m).parquet(fs.map(rel => new Path(table, rel).toString): _*)
+      spark.baseRelationToDataFrame(ManifestFileIndex.relation(spark, table, m, fs))
     def tag(df: DataFrame) = df.select(col("*"),
       col("_metadata.file_name").as("__dv_f"),
       col("_metadata.row_index").as("__dv_r"))
@@ -656,7 +662,8 @@ object TableLog {
       try fsys.getFileStatus(new Path(table, rel)).getLen
       catch { case scala.util.control.NonFatal(_) => Long.MaxValue / 1024 }).sum
     val dv = if (dvBytes <= DV_BROADCAST_BYTES) broadcast(dv0) else dv0
-    val base = scan(withDv)
+    val base = reader(spark, m)
+      .parquet(withDv.map(rel => new Path(table, rel).toString): _*)
     val outCols = base.columns.toSeq ++
       (if (keepPos) Seq("__dv_f", "__dv_r") else Seq.empty)
     val tagged = tag(base)
@@ -667,6 +674,15 @@ object TableLog {
     if (plain.isEmpty) applied
     else (if (keepPos) tag(scan(plain)) else scan(plain)).unionByName(applied)
   }
+
+  /** The exact row count of `files` of snapshot `m` from the
+    * manifest: Σ footer `rows` minus the files' DV cardinalities, or
+    * None when any file lacks stats (a legacy manifest, a footer that
+    * failed to parse). The one spelling [[detail]]'s `n_rows` and
+    * [[graft.plans.MetadataCount]] share. */
+  private[graft] def exactRows(m: Manifest, files: Seq[String]): Option[Long] =
+    if (!files.forall(f => m.stats.get(f).exists(_.rows >= 0))) None
+    else Some(files.map(m.stats(_).rows).sum - files.flatMap(m.dvs.get).map(_.card).sum)
 
   /** `rel`'s basename — the name [[readFiles]]' anti-join keys on. */
   private def baseName(rel: String): String = new Path(rel).getName
@@ -888,8 +904,9 @@ object TableLog {
         math.min(16, Runtime.getRuntime.availableProcessors))
       try rels.map { rel =>
         rel -> pool.submit(new java.util.concurrent.Callable[Option[TableStats.FileStats]] {
-          // stats are an optimization, never load-bearing: a footer
-          // that fails to parse just means this file is never pruned
+          // a footer that fails to parse leaves the file stat-less
+          // (never pruned, counted by a scan); a recorded `rows` must
+          // be exact — detail and plans.MetadataCount return it
           def call(): Option[TableStats.FileStats] =
             try Some(TableStats.fromFooter(conf, new Path(table, rel)))
             catch { case scala.util.control.NonFatal(_) => None }
@@ -1342,7 +1359,7 @@ object TableLog {
     * action, n_files, total_bytes, n_rows, n_dv_files, dv_rows,
     * n_columns, n_constraints). n_rows is exact when every file has stats (DV
     * cardinalities subtracted), −1 otherwise — never guessed from
-    * data reads. */
+    * data reads ([[exactRows]], the count MetadataCount serves). */
   def detail(spark: SparkSession, table: String,
              version: Option[Long] = None): DataFrame = {
     val m = manifest(spark, table, version)
@@ -1350,11 +1367,7 @@ object TableLog {
     val bytes = m.files.map(rel =>
       try f.getFileStatus(new Path(table, rel)).getLen
       catch { case scala.util.control.NonFatal(_) => 0L }).sum
-    val rows =
-      if (m.files.forall(m.stats.contains))
-        m.files.map(rel => m.stats(rel).rows).sum -
-          m.dvs.valuesIterator.map(_.card).sum
-      else -1L
+    val rows = exactRows(m, m.files).getOrElse(-1L)
     val nCols = m.schema.map(_.fields.length).getOrElse(-1)
     import spark.implicits._
     Seq((m.version, m.action, m.files.length.toLong, bytes, rows,

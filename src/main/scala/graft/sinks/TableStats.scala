@@ -15,7 +15,9 @@ import org.apache.spark.sql.catalyst.expressions._
   * ever builds a scan, so a selective query on a 100×-file table
   * opens only the files that can match (row-group pruning inside the
   * survivors still applies on top — this layer removes the
-  * every-footer-open cost that grows with file count).
+  * every-footer-open cost that grows with file count). The footer
+  * `rows` also serve [[TableLog.detail]] and the metadata-only
+  * `count()` of [[graft.plans.MetadataCount]].
   *
   * Pruning is CONSERVATIVE by construction: any expression shape,
   * type, or missing statistic this evaluator doesn't understand keeps

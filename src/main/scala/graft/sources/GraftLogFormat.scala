@@ -1,15 +1,10 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, SQLContext}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider}
 import org.apache.spark.sql.types.StructType
 
-import graft.sinks.{TableLog, TableStats}
+import graft.sinks.{ManifestFileIndex, TableLog}
 
 /** The FORMAT FACE of [[graft.sinks.TableLog]] — `graftlog` as a
   * Spark data source, so every table verb is reachable from the
@@ -29,14 +24,15 @@ import graft.sinks.{TableLog, TableStats}
   *
   * Architecture — the Delta connector's own route, not a hand-rolled
   * reader: `createRelation` resolves the pinned manifest and returns a
-  * [[HadoopFsRelation]] over a custom [[FileIndex]] whose file listing
-  * IS the manifest (plus Spark's stock [[ParquetFileFormat]]), so the
+  * [[HadoopFsRelation]] over a [[graft.sinks.ManifestFileIndex]] whose
+  * file listing IS the manifest (plus Spark's stock parquet format) —
+  * the same relation `TableLog.read` plans — so the
   * scan path is the engine's own vectorized parquet reader with
   * predicate pushdown, column pruning and whole-stage codegen
   * unchanged. MANIFEST-STATS SKIPPING engages through the standard
   * planner seam: `FileSourceStrategy` hands the pushed data filters to
   * `FileIndex.listFiles`, where each file's committed footer stats run
-  * through [[TableStats.mayContain]] — files that provably cannot
+  * through [[graft.sinks.TableStats.mayContain]] — files that provably cannot
   * match never enter the scan (the `readWhere` prune, now under plain
   * `df.filter`/SQL WHERE with zero caller cooperation). Pruning here
   * is never load-bearing: the scan re-applies the full filter to the
@@ -74,17 +70,8 @@ class GraftLogSource extends RelationProvider
     // vectors (the standing maintenance answer)
     if (m.dvs.nonEmpty)
       return new GraftLogDvRelation(spark, table, m.version)
-    // committed schema when present; legacy pre-schema tables fall
-    // back to one footer read (the TableLog.read rule)
-    val dataSchema = m.schema.getOrElse(
-      spark.read.parquet(new Path(table, m.files.head).toString).schema)
-    HadoopFsRelation(
-      location = new GraftLogFileIndex(spark, table, m),
-      partitionSchema = StructType(Nil),
-      dataSchema = dataSchema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark)
+    // the TableLog.read scan: the manifest's listing as the file index
+    ManifestFileIndex.relation(spark, table, m, m.files)
   }
 
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
@@ -161,45 +148,4 @@ private[sources] class GraftLogDvRelation(
     // count(*) scans — select() with no args is the empty projection)
     filtered.select(requiredColumns.toIndexedSeq.map(col): _*).rdd
   }
-}
-
-/** The manifest AS a [[FileIndex]]: listing = the pinned version's
-  * file set, `listFiles` = that set minus the files whose committed
-  * stats prove no pushed data filter can match ([[TableStats
-  * .mayContain]] per conjunct — conservative, any unknown shape keeps
-  * the file). One `getFileStatus` per file at build time (driver-side
-  * metadata, O(files) like the manifest itself). */
-private[sources] class GraftLogFileIndex(
-    spark: SparkSession, table: String, m: TableLog.Manifest)
-    extends FileIndex {
-
-  private val fsys = new Path(table)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** (relative path in the manifest, resolved status). Clone
-    * manifests hold absolute paths — Path(table, rel) resolves both. */
-  private val files: Seq[(String, FileStatus)] = m.files.map { rel =>
-    rel -> fsys.getFileStatus(new Path(table, rel))
-  }
-
-  override def rootPaths: Seq[Path] =
-    Seq(fsys.makeQualified(new Path(table)))
-
-  override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = files.collect {
-      case (rel, st) if m.stats.get(rel).forall(s =>
-        dataFilters.forall(TableStats.mayContain(s, _))) => st
-    }
-    Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
-  }
-
-  override def inputFiles: Array[String] =
-    files.map(_._2.getPath.toString).toArray
-
-  override def refresh(): Unit = () // pinned at build — the reader contract
-
-  override def sizeInBytes: Long = files.map(_._2.getLen).sum
-
-  override def partitionSchema: StructType = StructType(Nil)
 }

@@ -134,22 +134,22 @@ class AnalyticsSpec extends SparkSpec {
     // (signatures are per-document, so per-batch stores union to it)
     val headStore = TableLog.read(spark, t)
     val direct = DedupOps.minhashBandStore(docs)
-    assert(headStore.count() == direct.count() &&
+    assert(headStore.rdd.count() == direct.count() &&
       headStore.exceptAll(direct).count() == 0)
     // compaction night: keeper-only rewrite publishes as a NEW
     // version; the pinned pre-compaction store is untouched
     val comps = DedupOps.nearDupComponents(full)
     val compacted = DedupOps.compactBandStore(headStore, comps)
     val vC = TableLog.overwrite(compacted, t)
-    assert(TableLog.read(spark, t, Some(vC)).count() == compacted.count())
-    assert(TableLog.read(spark, t, Some(v3)).count() == direct.count(),
+    assert(TableLog.read(spark, t, Some(vC)).rdd.count() == compacted.count())
+    assert(TableLog.read(spark, t, Some(v3)).rdd.count() == direct.count(),
       "pinned pre-compaction version must keep its exact file set")
     // a crashed writer's unreferenced data files stay invisible
     val stray = new java.io.File(s"$t/data/ccrashed")
     stray.mkdirs()
     java.nio.file.Files.writeString(
       new java.io.File(stray, "part-00000-x.parquet").toPath, "junk")
-    assert(TableLog.read(spark, t).count() == compacted.count())
+    assert(TableLog.read(spark, t).rdd.count() == compacted.count())
     assert(TableLog.orphans(spark, t).contains("data/ccrashed/part-00000-x.parquet"))
   }
 

@@ -40,7 +40,7 @@ class ConstraintsSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException] {
       TableLog.addConstraint(spark, t, "id_nonneg", "id >= -5")
     }.getMessage.contains("already exists"))
-    assert(TableLog.read(spark, t).count() == 12)
+    assert(TableLog.read(spark, t).rdd.count() == 12)
   }
 
   test("enforcement re-reads the written files with the batch's schema, inferring none") {
@@ -54,7 +54,7 @@ class ConstraintsSpec extends SparkSpec {
     // the enforcement scan alone (limit(1).count: a map and a result
     // job); inferring the written files' schema was a third
     assert(checkedJobs - plainJobs == 2, s"plain $plainJobs, constrained $checkedJobs")
-    assert(TableLog.read(spark, checked).count() == 20)
+    assert(TableLog.read(spark, checked).rdd.count() == 20)
   }
 
   test("NULL passes a CHECK (SQL-standard UNKNOWN); IS NOT NULL rejects it") {
@@ -146,7 +146,7 @@ class ConstraintsSpec extends SparkSpec {
     }.getMessage.contains("pay_ok"))
     TableLog.overwrite(Seq((1L, "fine", 7)).toDF("id", "payload", "extra"),
       t, overwriteSchema = true)
-    assert(TableLog.read(spark, t).count() == 1)
+    assert(TableLog.read(spark, t).rdd.count() == 1)
   }
 
   test("constraints version with the table: restore brings back the old contract") {
@@ -159,7 +159,7 @@ class ConstraintsSpec extends SparkSpec {
     assert(TableLog.constraintsOf(spark, t).isEmpty,
       "restore must bring back the restored version's (empty) contract")
     TableLog.append(batch(200 until 202), t)        // id 200+ fine again
-    assert(TableLog.read(spark, t).count() == 10)
+    assert(TableLog.read(spark, t).rdd.count() == 10)
   }
 
   test("merge and streaming paths enforce; drop re-opens; incremental consumers ride across") {
@@ -168,7 +168,7 @@ class ConstraintsSpec extends SparkSpec {
     val vAdd = TableLog.addConstraint(spark, t, "pay_ok", "payload <> 'bad'")
     // incremental consumer: the constraint commit is an EMPTY append,
     // not a rewrite — readAppendsSince rides across it
-    assert(TableLog.readAppendsSince(spark, t, 1L).count() == 0)
+    assert(TableLog.readAppendsSince(spark, t, 1L).rdd.count() == 0)
     val bad = Seq((3L, 1L, "U", "bad")).toDF("id", "seq", "op", "payload")
     assert(intercept[IllegalArgumentException] {
       TableLog.merge(spark, t, bad, "id", "seq", "op")

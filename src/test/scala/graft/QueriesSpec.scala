@@ -39,6 +39,22 @@ class QueriesSpec extends SparkSpec {
     assert(plan.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq == eager)
   }
 
+  test("q182 row-count invariants read the manifest: Q.run starts 5 jobs (9 before), rows unchanged") {
+    import org.apache.spark.sql.functions._
+    val d = sf("sf0.001")
+    val q = SparkEntry.queries("q182_table_merge_compact")
+    q(spark, d) // warm: the first corpus read infers the documents schema
+    val (plan, jobs) = jobsIn(q(spark, d))
+    // the two compaction checks each counted with a 2-job aggregate
+    assert(jobs == 5, s"Q.run started $jobs jobs")
+    val want = graft.sources.Tables.documents(spark, d)
+      .filter(col("doc_id") % 2 === 0 || col("doc_id") % 3 === 0)
+      .select(col("doc_id"),
+        when(col("doc_id") % 2 === 0, col("source")).otherwise(lit("UPSERTED")))
+      .orderBy("doc_id").collect().toSeq
+    assert(plan.collect().toSeq == want)
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

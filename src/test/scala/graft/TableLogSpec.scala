@@ -170,7 +170,7 @@ class TableLogSpec extends SparkSpec {
     assert(postScan < preScan / 2,
       s"z-order must prune the y-box at the footer: $preScan -> $postScan scan rows")
     // the pre-zorder layout is still pinned at v1
-    assert(TableLog.read(spark, t, Some(1)).count() == n.toLong)
+    assert(TableLog.read(spark, t, Some(1)).rdd.count() == n.toLong)
   }
 
   test("exactly-once streaming append: a replayed micro-batch publishes nothing") {
@@ -321,6 +321,13 @@ class TableLogSpec extends SparkSpec {
       .map(_.metrics("numFiles").value).sum
     assert(numFiles > 0 && numFiles < 6,
       s"scan opened $numFiles files; skipping should keep it under 6")
+    // a plain read's filter prunes the same files: its scan's file
+    // index is the manifest, which the planner hands the pushed filters
+    val plain = TableLog.read(spark, t).filter(pred)
+    assert(plain.collect().map(_.getLong(0)).sorted.toSeq == (120L until 180L))
+    val plainFiles = scans(plain.queryExecution.executedPlan)
+      .map(_.metrics("numFiles").value).sum
+    assert(plainFiles == kept.length, s"plain read opened $plainFiles of ${kept.length} files")
     // string stats prune too (UTF-8 order): doc-250 is outside the
     // middle commit's [doc-100, doc-199] but lexicographically INSIDE
     // commit 1's [doc-0, doc-99] — exactly one commit pruned
@@ -433,7 +440,7 @@ class TableLogSpec extends SparkSpec {
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.FloatType, containsNull = true)))))
     TableLog.append(vecsNullable, t2) // must NOT throw
-    assert(TableLog.read(spark, t2).count() == 2)
+    assert(TableLog.read(spark, t2).rdd.count() == 2)
     // a REAL element-type change still rejects
     intercept[IllegalArgumentException] {
       TableLog.append(Seq((3L, Seq(1.0))).toDF("id", "vec"), t2) // array<double>
@@ -841,7 +848,7 @@ class TableLogSpec extends SparkSpec {
     val st = TableLog.manifest(spark, t).schema.get
     assert(st.fieldNames.toSeq == Seq("id", "payload"),
       s"case-only drift must not add columns: ${st.fieldNames.toSeq}")
-    assert(TableLog.read(spark, t).count() == 4)
+    assert(TableLog.read(spark, t).rdd.count() == 4)
     // a case-drifted TYPE clash still rejects
     intercept[IllegalArgumentException] {
       TableLog.append(Seq(("x", "y")).toDF("ID", "payload"), t)
@@ -1412,7 +1419,7 @@ class TableLogSpec extends SparkSpec {
       "m1", 2L).contains(3L))
     assert(TableLog.mergeStreamBatch(spark, t, noop, "id", "seq", "op",
       "m1", 2L).isEmpty)
-    assert(TableLog.readAppendsSince(spark, t, 2L).count() == 0L)
+    assert(TableLog.readAppendsSince(spark, t, 2L).rdd.count() == 0L)
     // an independent writer's ledger entry is separate
     assert(TableLog.mergeStreamBatch(spark, t, noop, "id", "seq", "op",
       "m2", 0L).contains(4L))
