@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * Materialization is a noop-format write — the whole result set is
@@ -249,25 +247,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Codegen-unit cache (static conf, default 100 entries): the
-      // suite's join-heavy queries compile 100-250 janino units per
-      // RUN, so the default LRU evicts everything between best-of-2
-      // repeats and the second run re-pays the full compile bill
-      // (q166/q167/q206 measured 18-45 s of METRIC_COMPILATION_TIME
-      // per run with executors <30% busy — driver codegen was the
-      // critical path). Sized to hold the whole suite's units; scale-
-      // independent (the cache is per-JVM and generated source is
-      // deterministic), overridable via SPARK_GRAFT_CODEGEN_CACHE.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Optional comma-separated substring filter for quick iteration.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)

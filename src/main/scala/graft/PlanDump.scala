@@ -18,11 +18,9 @@ object PlanDump {
       "usage: PlanDump <dir> <tag> <q1,q2,...> [sfDir]")
     val Array(dir, tag, names) = args.take(3)
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.001")
-    // the shipped factory (so a dump shows the plan collect-driven
-    // callers execute, CollectSort root included) + Bench's codegen cache
-    val spark = GraftSession.builder("local[4]", 4)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    // Bench's session (so a dump shows the plan collect-driven
+    // callers execute, CollectSort root included)
+    val spark = GraftSession.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val out = Paths.get(s"plans/$dir")
     Files.createDirectories(out)

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-style smoke: run the flagship entry on sf0.001 and assert
   * rows > 0 — mirrors the harness t1 check so it can be driven
   * locally before a round ends. Exit code 0 iff the smoke passes.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows=$n queries=${SparkEntry.queries.size} oracles=${SparkEntry.oracleSql.size}")

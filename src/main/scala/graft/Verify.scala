@@ -8,13 +8,7 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the shipped factory, so the dump runs the rules the library
     // registers (MetadataCount inside q182, ...)
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      // hold every generated codegen unit for the whole dump (the
-      // Bench rationale: the default 100-entry LRU thrashes across
-      // 211 queries and re-compiles identical units)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q60,q65 → dump only the named query prefixes

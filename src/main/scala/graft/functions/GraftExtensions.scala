@@ -107,9 +107,7 @@ object GraftExtensions {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteWindowTopK))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.RewriteWindowTopK
-    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
+    graft.plans.TopKPerKeyStrategy.setup(spark)
   }
 }
 

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder, UnsafeProjection}
@@ -38,6 +38,11 @@ final case class TopKPerKeyPlan(
 }
 
 object TopKPerKeyStrategy extends SparkStrategy {
+  /** Registers the strategy on a live session, once (idempotent). */
+  def setup(spark: SparkSession): Unit =
+    if (!spark.experimental.extraStrategies.contains(this))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ this
+
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKeyPlan(keys, score, tiebreak, k, child) =>
       // Two-phase, like partial aggregation: the map-side (partial)
@@ -139,10 +144,7 @@ object TopKPerKey {
       analyzed.output.find(_.name == n).getOrElse(
         throw new IllegalArgumentException(
           s"column '$n' not in ${analyzed.output.map(_.name).mkString(", ")}"))
-    // register the strategy once per session
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
+    TopKPerKeyStrategy.setup(spark)
     DatasetBridge.ofRows(spark,
       TopKPerKeyPlan(
         keyCols.map(attr),

@@ -1,0 +1,37 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Source guard for the one session factory: every `main` builds its
+  * session through [[GraftSession]], so the plans the harness times
+  * are the plans the library ships (its rules, its confs, its codegen
+  * cache), and hand-written config blocks cannot drift back in. */
+class SessionFactorySpec extends AnyFunSuite {
+
+  private lazy val sources: Seq[(String, String)] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: $root")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map((p: Path) => p.getFileName.toString -> Files.readString(p))
+    finally walk.close()
+  }
+
+  test("SparkSession.builder() and the codegen-cache overlay are spelled only in GraftSession.scala") {
+    assert(sources.exists(_._1 == "GraftSession.scala"))
+    val builders = sources.collect { case (f, s) if s.contains("SparkSession.builder()") => f }
+    assert(builders == Seq("GraftSession.scala"))
+    val caches = sources.collect {
+      case (f, s) if s.contains("spark.sql.codegen.cache.maxEntries") => f }
+    assert(caches == Seq("GraftSession.scala"))
+  }
+
+  test("every main builds its session through GraftSession") {
+    val mains = sources.filter(_._2.contains("def main("))
+    assert(mains.nonEmpty)
+    val handBuilt = mains.collect { case (f, s) if !s.contains("GraftSession.") => f }
+    assert(handBuilt.isEmpty, s"mains not on the factory: $handBuilt")
+  }
+}
