@@ -24,42 +24,19 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
-  /** The Z-order (Morton) key of two non-negative integer dimensions:
-    * bit b of x lands at position 2b, bit b of y at 2b+1. `bits`
-    * low bits of each dimension participate (values must fit, i.e.
-    * 0 ≤ v < 2^bits — the caller normalizes real-valued dims into a
-    * grid first). Spelled as a Σ of shift/mask terms — pure integer
-    * arithmetic, codegen'd, and exactly expressible in ANSI SQL for
-    * the oracle (q137). */
-  def zorderKey(x: Column, y: Column, bits: Int = 16): Column = {
-    require(bits >= 1 && bits <= 31, s"zorderKey: bits=$bits outside [1,31]")
-    (0 until bits).flatMap { b =>
-      Seq(
-        shiftleft(shiftright(x.cast("long"), b).bitwiseAND(lit(1L)), 2 * b),
-        shiftleft(shiftright(y.cast("long"), b).bitwiseAND(lit(1L)), 2 * b + 1))
-    }.reduceLeft(_ + _)
-  }
-
-  /** The matching oracle SQL expression (DuckDB/ANSI bit operators),
-    * generated from the same loop so the two spellings cannot
-    * drift. */
-  def zorderKeySql(x: String, y: String, bits: Int = 16): String =
-    (0 until bits).flatMap { b =>
-      // BIGINT casts up front: an INTEGER shifted past bit 31 would
-      // overflow where the Spark side (cast to long) does not
-      Seq(
-        s"(((CAST($x AS BIGINT) >> $b) & 1) << ${2 * b})",
-        s"(((CAST($y AS BIGINT) >> $b) & 1) << ${2 * b + 1})")
-    }.mkString(" + ")
-
-  /** N-DIMENSIONAL Morton key — the Delta/Iceberg `OPTIMIZE ZORDER BY
-    * (c1, …, cn)` surface: bit b of dimension i lands at position
-    * n·b + i, so rows close in ALL n dimensions are close on the one
-    * sort key and every dimension's per-file min/max stays tight.
-    * The interleaved key must fit a signed long: n·bits ≤ 63 (3 dims
-    * × 16 bits, 4 × 15, 6 × 10 …) — more dims trade per-dim
-    * resolution, the classic z-order budget. n = 2 reproduces
-    * [[zorderKey]] bit-for-bit (same loop, generalized stride). */
+  /** The Z-order (Morton) key of n ≥ 2 non-negative integer
+    * dimensions — the Delta/Iceberg `OPTIMIZE ZORDER BY (c1, …, cn)`
+    * surface: bit b of dimension i lands at position n·b + i, so rows
+    * close in ALL n dimensions are close on the one sort key and every
+    * dimension's per-file min/max stays tight (n = 2: x's bit b at 2b,
+    * y's at 2b+1). `bits` low bits of each dimension participate
+    * (values must fit, i.e. 0 ≤ v < 2^bits — the caller normalizes
+    * real-valued dims into a grid first). The interleaved key must fit
+    * a signed long: n·bits ≤ 63 (2 dims × 31 bits, 3 × 16, 4 × 15 …) —
+    * more dims trade per-dim resolution, the classic z-order budget.
+    * Spelled as a Σ of shift/mask terms — pure integer arithmetic,
+    * codegen'd, and exactly expressible in ANSI SQL for the oracle
+    * (q137, q193). */
   def zorderKeyN(dims: Seq[Column], bits: Int = 16): Column = {
     val n = dims.length
     require(n >= 2, s"zorderKeyN: need >= 2 dimensions, got $n")
@@ -72,10 +49,14 @@ object Layout {
     }.reduceLeft(_ + _)
   }
 
-  /** Oracle SQL for [[zorderKeyN]], generated from the same loop. */
+  /** The matching oracle SQL expression (DuckDB/ANSI bit operators),
+    * generated from the same loop so the two spellings cannot
+    * drift. */
   def zorderKeyNSql(dims: Seq[String], bits: Int = 16): String = {
     val n = dims.length
     (0 until bits).flatMap { b =>
+      // BIGINT casts up front: an INTEGER shifted past bit 31 would
+      // overflow where the Spark side (cast to long) does not
       dims.zipWithIndex.map { case (d, i) =>
         s"(((CAST($d AS BIGINT) >> $b) & 1) << ${n * b + i})"
       }
@@ -110,28 +91,16 @@ object Layout {
   def writeZOrdered(df: DataFrame, xCol: String, yCol: String, path: String,
                     nFiles: Int, bits: Int = 16,
                     writerOptions: Map[String, String] = Map.empty): Unit =
-    clusterZOrdered(df, xCol, yCol, nFiles, bits)
+    clusterZOrderedN(df, Seq(xCol, yCol), nFiles, bits)
       .write.mode("overwrite").options(writerOptions).parquet(path)
 
-  /** The clustered FRAME writeZOrdered writes — grid-checked z-key,
-    * range-partitioned into nFiles, sorted within partitions —
-    * exposed so the table log's OPTIMIZE ZORDER
-    * ([[graft.sinks.TableLog.compactZOrder]]) can publish the same
-    * layout through its manifest protocol instead of a bare
-    * directory write. ONE spelling of the clustering (this method);
-    * the two writers cannot drift. */
-  def clusterZOrdered(df: DataFrame, xCol: String, yCol: String,
-                      nFiles: Int, bits: Int = 16): DataFrame =
-    df.withColumn("_zk", zorderKey(
-        inGridOrError(col(xCol), xCol, bits),
-        inGridOrError(col(yCol), yCol, bits), bits))
-      .repartitionByRange(nFiles, col("_zk"))
-      .sortWithinPartitions("_zk")
-      .drop("_zk")
-
-  /** N-dimensional [[clusterZOrdered]] — one clustering spelling for
-    * any dimension count, grid-checked per dim, published through
-    * [[graft.sinks.TableLog.compactZOrderN]] or a bare write. */
+  /** The clustered FRAME writeZOrdered writes — grid-checked z-key
+    * over `cols`, range-partitioned into nFiles, sorted within
+    * partitions — exposed so the table log's OPTIMIZE ZORDER
+    * ([[graft.sinks.TableLog.compact]] with `zorder`) publishes the
+    * same layout through its manifest protocol instead of a bare
+    * directory write. ONE spelling of the clustering for any
+    * dimension count; the two writers cannot drift. */
   def clusterZOrderedN(df: DataFrame, cols: Seq[String],
                        nFiles: Int, bits: Int = 16): DataFrame =
     df.withColumn("_zk", zorderKeyN(

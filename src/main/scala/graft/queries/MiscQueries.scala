@@ -676,15 +676,15 @@ object MiscQueries {
     // LayoutSpec measures the same box query emitting 70× fewer
     // rows from the scan on a z-ordered write). Pure integer shift
     // arithmetic; the SQL side is GENERATED from the same loop
-    // (Layout.zorderKeySql), so the spellings cannot drift, and the
+    // (Layout.zorderKeyNSql), so the spellings cannot drift, and the
     // gate hash-verifies every interleaved bit.
     Q("q137_zorder_key",
       s"""SELECT c_custkey,
-         |  CAST(${graft.ops.Layout.zorderKeySql("c_custkey", "c_nationkey")} AS BIGINT) AS zkey
+         |  CAST(${graft.ops.Layout.zorderKeyNSql(Seq("c_custkey", "c_nationkey"))} AS BIGINT) AS zkey
          |FROM customer ORDER BY c_custkey""".stripMargin) { (s, d) =>
       Tables.customer(s, d)
         .select(col("c_custkey"),
-          graft.ops.Layout.zorderKey(col("c_custkey"), col("c_nationkey")).as("zkey"))
+          graft.ops.Layout.zorderKeyN(Seq(col("c_custkey"), col("c_nationkey"))).as("zkey"))
         .orderBy("c_custkey")
     },
 

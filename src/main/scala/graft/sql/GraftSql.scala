@@ -217,23 +217,12 @@ object GraftSql {
     case OPTIMIZE(name, whereCond, zcols, nf) =>
       val path = registered(spark, name)
       val numFiles = Option(nf).map(_.toInt).getOrElse(4)
-      val zcolsSeq = Option(zcols).map(_.split(",").map(_.trim).toSeq)
-      val out = Option(whereCond).filter(_.trim.nonEmpty) match {
-        case Some(cond) =>
-          // predicate-scoped OPTIMIZE [ZORDER]: Spark's own expression
-          // parser, qualifiers stripped (single relation)
-          val pred = asColumn(spark.sessionState.sqlParser.parseExpression(cond))
-          TableLog.compactWhere(spark, path, pred, numFiles,
-            zcolsSeq.getOrElse(Seq.empty))
-        case None => zcolsSeq match {
-          case Some(cols) =>
-            // the N-dim interleaver needs ≥ 2 dims; ZORDER BY (c) is a
-            // plain cluster-by-c, which interleaving (c, c) reproduces
-            TableLog.compactZOrderN(spark, path,
-              if (cols.size == 1) cols ++ cols else cols, numFiles)
-          case None => TableLog.compact(spark, path, numFiles)
-        }
-      }
+      // predicate-scoped OPTIMIZE [ZORDER]: Spark's own expression
+      // parser, qualifiers stripped (single relation)
+      val out = TableLog.compact(spark, path, numFiles,
+        Option(whereCond).filter(_.trim.nonEmpty)
+          .map(c => asColumn(spark.sessionState.sqlParser.parseExpression(c))),
+        Option(zcols).map(_.split(",").map(_.trim).toSeq).getOrElse(Seq.empty))
       refreshView(spark, name)
       verbResult(spark, name, "optimize", out)
     case _ =>

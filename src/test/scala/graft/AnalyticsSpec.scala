@@ -106,51 +106,52 @@ class AnalyticsSpec extends SparkSpec {
     val a = docs.filter($"doc_id" % 3 === 0)
     val b = docs.filter($"doc_id" % 3 === 1)
     val c = docs.filter($"doc_id" % 3 === 2)
-    val t = java.nio.file.Files.createTempDirectory("graft-bandstore-log").toString
-    // night 0: build + commit v1
-    val v1 = TableLog.append(DedupOps.minhashBandStore(a), t)
-    // night 1: delta b probes the PINNED v1 read; b's bands append as v2
-    val pairs1 = DedupOps.minhashLshPairs(a, 0.6).unionByName(
-      DedupOps.incrementalLshPairs(TableLog.read(spark, t, Some(v1)), a, b, 0.6))
-    val v2 = TableLog.append(DedupOps.minhashBandStore(b), t)
-    // night 2: RACING nightly writers — c's band append loses one
-    // publish race to a competing (empty-delta re-commit) writer,
-    // rebases, and lands without losing either side
-    var injected = false
-    val v3 = TableLog.append(DedupOps.minhashBandStore(c), t,
-      beforeCommit = _ => if (!injected) {
-        injected = true
-        TableLog.append(DedupOps.minhashBandStore(b.limit(0)), t): Unit
-      })
-    assert(v3 == 4L, "lost race must rebase onto the competitor's head")
-    val pairs2 = pairs1.unionByName(DedupOps.incrementalLshPairs(
-      TableLog.read(spark, t, Some(v2)), a.unionByName(b), c, 0.6))
-    // the pinned-probe chain equals the full recompute exactly
-    val full = DedupOps.minhashLshPairs(docs, 0.6)
-    assert(pairs2.exceptAll(full).count() == 0 &&
-      full.exceptAll(pairs2).count() == 0 && pairs2.count() == full.count(),
-      "TableLog-served incremental chain must equal the full recompute")
-    // the head store's CONTENT equals the direct full-corpus build
-    // (signatures are per-document, so per-batch stores union to it)
-    val headStore = TableLog.read(spark, t)
-    val direct = DedupOps.minhashBandStore(docs)
-    assert(headStore.rdd.count() == direct.count() &&
-      headStore.exceptAll(direct).count() == 0)
-    // compaction night: keeper-only rewrite publishes as a NEW
-    // version; the pinned pre-compaction store is untouched
-    val comps = DedupOps.nearDupComponents(full)
-    val compacted = DedupOps.compactBandStore(headStore, comps)
-    val vC = TableLog.overwrite(compacted, t)
-    assert(TableLog.read(spark, t, Some(vC)).rdd.count() == compacted.count())
-    assert(TableLog.read(spark, t, Some(v3)).rdd.count() == direct.count(),
-      "pinned pre-compaction version must keep its exact file set")
-    // a crashed writer's unreferenced data files stay invisible
-    val stray = new java.io.File(s"$t/data/ccrashed")
-    stray.mkdirs()
-    java.nio.file.Files.writeString(
-      new java.io.File(stray, "part-00000-x.parquet").toPath, "junk")
-    assert(TableLog.read(spark, t).rdd.count() == compacted.count())
-    assert(TableLog.orphans(spark, t).contains("data/ccrashed/part-00000-x.parquet"))
+    // the store lives on the racing object-store seam, so the night-2
+    // race is a real lost conditional put
+    RacingLogStore.withStore(spark) { (store, table) =>
+      val t = table()
+      // night 0: build + commit v1
+      val v1 = TableLog.append(DedupOps.minhashBandStore(a), t)
+      // night 1: delta b probes the PINNED v1 read; b's bands append as v2
+      val pairs1 = DedupOps.minhashLshPairs(a, 0.6).unionByName(
+        DedupOps.incrementalLshPairs(TableLog.read(spark, t, Some(v1)), a, b, 0.6))
+      val v2 = TableLog.append(DedupOps.minhashBandStore(b), t)
+      // night 2: RACING nightly writers — c's band append loses one
+      // publish race to a competing (empty-delta re-commit) writer,
+      // rebases, and lands without losing either side
+      store.arm(TableLog.append(DedupOps.minhashBandStore(b.limit(0)), t): Unit)
+      val v3 = TableLog.append(DedupOps.minhashBandStore(c), t)
+      assert(store.losses == 1)
+      assert(v3 == 4L, "lost race must rebase onto the competitor's head")
+      val pairs2 = pairs1.unionByName(DedupOps.incrementalLshPairs(
+        TableLog.read(spark, t, Some(v2)), a.unionByName(b), c, 0.6))
+      // the pinned-probe chain equals the full recompute exactly
+      val full = DedupOps.minhashLshPairs(docs, 0.6)
+      assert(pairs2.exceptAll(full).count() == 0 &&
+        full.exceptAll(pairs2).count() == 0 && pairs2.count() == full.count(),
+        "TableLog-served incremental chain must equal the full recompute")
+      // the head store's CONTENT equals the direct full-corpus build
+      // (signatures are per-document, so per-batch stores union to it)
+      val headStore = TableLog.read(spark, t)
+      val direct = DedupOps.minhashBandStore(docs)
+      assert(headStore.rdd.count() == direct.count() &&
+        headStore.exceptAll(direct).count() == 0)
+      // compaction night: keeper-only rewrite publishes as a NEW
+      // version; the pinned pre-compaction store is untouched
+      val comps = DedupOps.nearDupComponents(full)
+      val compacted = DedupOps.compactBandStore(headStore, comps)
+      val vC = TableLog.overwrite(compacted, t)
+      assert(TableLog.read(spark, t, Some(vC)).rdd.count() == compacted.count())
+      assert(TableLog.read(spark, t, Some(v3)).rdd.count() == direct.count(),
+        "pinned pre-compaction version must keep its exact file set")
+      // a crashed writer's unreferenced data files stay invisible
+      val stray = new java.io.File(s"${t.stripPrefix("grafts3://")}/data/ccrashed")
+      stray.mkdirs()
+      java.nio.file.Files.writeString(
+        new java.io.File(stray, "part-00000-x.parquet").toPath, "junk")
+      assert(TableLog.read(spark, t).rdd.count() == compacted.count())
+      assert(TableLog.orphans(spark, t).contains("data/ccrashed/part-00000-x.parquet"))
+    }
   }
 
   test("LSH embedding near-dup ⊆ exact pairs, identical sims, catches sim ≥ 0.9") {

@@ -105,8 +105,8 @@ class ConstraintsSpec extends SparkSpec {
     TableLog.delete(spark, t, col("id") === 1L); check("delete")
     TableLog.deleteVectors(spark, t, col("id") === 2L); check("deleteVectors")
     TableLog.compact(spark, t, 2); check("compact")
-    TableLog.compactZOrder(spark, t, "id", "id", 2); check("zorder")
-    TableLog.compactWhere(spark, t, col("id") < 10); check("compactWhere")
+    TableLog.compact(spark, t, 2, zorder = Seq("id")); check("zorder")
+    TableLog.compact(spark, t, where = Some(col("id") < 10)); check("compact where")
     TableLog.compactSmallFiles(spark, t, smallBytes = 1L << 30,
       minSmallFiles = 2); check("compactSmallFiles")
     val ch = Seq((5L, 1L, "U", "upd", 2))

@@ -19,10 +19,28 @@ class FakeObjectStoreFS extends RawLocalFileSystem {
     FakeObjectStoreFS.opens.incrementAndGet()
     super.open(f, bufferSize)
   }
+  override def getFileStatus(f: Path): org.apache.hadoop.fs.FileStatus =
+    FakeObjectStoreFS.eager(super.getFileStatus(f))
+  override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] =
+    super.listStatus(f).map(FakeObjectStoreFS.eager)
 }
 
 object FakeObjectStoreFS {
   val opens = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** RawLocalFileSystem's DeprecatedRawLocalFileStatus loads
+    * permissions LAZILY via `new java.io.File(path.toUri)`, which
+    * rejects any non-file scheme (a recursive `listFiles` builds
+    * LocatedFileStatus from them) — return statuses with permissions
+    * resolved eagerly so no caller ever triggers that path on a fake
+    * object-store URI. */
+  def eager(st: org.apache.hadoop.fs.FileStatus): org.apache.hadoop.fs.FileStatus =
+    new org.apache.hadoop.fs.FileStatus(st.getLen, st.isDirectory,
+      st.getReplication, st.getBlockSize, st.getModificationTime,
+      st.getAccessTime,
+      if (st.isDirectory) org.apache.hadoop.fs.permission.FsPermission.getDirDefault
+      else org.apache.hadoop.fs.permission.FsPermission.getFileDefault,
+      null, null, st.getPath)
 }
 
 /** The same stand-in registered under the REAL `s3a` scheme — the
@@ -48,21 +66,11 @@ class FakeS3AFS extends RawLocalFileSystem {
     super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
 
-  // RawLocalFileSystem's DeprecatedRawLocalFileStatus loads
-  // permissions LAZILY via `new java.io.File(path.toUri)`, which
-  // rejects any non-file scheme — return statuses with permissions
-  // resolved eagerly so no caller ever triggers that path on s3a URIs
-  private def eager(st: org.apache.hadoop.fs.FileStatus): org.apache.hadoop.fs.FileStatus =
-    new org.apache.hadoop.fs.FileStatus(st.getLen, st.isDirectory,
-      st.getReplication, st.getBlockSize, st.getModificationTime,
-      st.getAccessTime,
-      if (st.isDirectory) org.apache.hadoop.fs.permission.FsPermission.getDirDefault
-      else org.apache.hadoop.fs.permission.FsPermission.getFileDefault,
-      null, null, st.getPath)
+  // eager permissions, as in FakeObjectStoreFS
   override def getFileStatus(f: Path): org.apache.hadoop.fs.FileStatus =
-    eager(super.getFileStatus(f))
+    FakeObjectStoreFS.eager(super.getFileStatus(f))
   override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] =
-    super.listStatus(f).map(eager)
+    super.listStatus(f).map(FakeObjectStoreFS.eager)
 }
 
 object FakeS3AFS {

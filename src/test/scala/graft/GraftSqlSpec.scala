@@ -144,6 +144,43 @@ class GraftSqlSpec extends SparkSpec {
     assert(GraftSql.sql(spark, "SELECT 1 AS one").head.getInt(0) == 1)
   }
 
+  test("full-table erasure commits an empty-but-readable version under both DELETE registrations and through MERGE") {
+    def filled(): String = {
+      val t = tmpTable()
+      TableLog.append((0L until 12L).map(i => (i, s"p$i")).toDF("id", "payload")
+        .coalesce(2), t)
+      t
+    }
+    def emptyVersion(t: String, name: String, action: String): Unit = {
+      val m = TableLog.manifest(spark, t)
+      assert(m.version == 2L && m.action == action, s"$name: ${m.version} ${m.action}")
+      assert(m.files.size == 1 && m.dvs.isEmpty,
+        s"$name: one schema-bearing empty file, no vectors: $m")
+      assert(TableLog.read(spark, t).schema.fieldNames.toSeq == Seq("id", "payload"))
+      assert(TableLog.read(spark, t).collect().isEmpty && rows(name).isEmpty, name)
+      // the erased table is an ordinary table: the next append lands on it
+      TableLog.append(Seq((99L, "back")).toDF("id", "payload"), t)
+      GraftSql.register(spark, name, t)
+      assert(rows(name) == Seq((99L, "back")), name)
+    }
+    // copy-on-write and merge-on-read registrations commit the same version
+    Seq(false, true).foreach { dv =>
+      val name = if (dv) "gsql_erase_dv" else "gsql_erase"
+      val t = filled()
+      GraftSql.register(spark, name, t, deleteVectors = dv)
+      GraftSql.sql(spark, s"DELETE FROM $name WHERE true")
+      emptyVersion(t, name, "delete")
+    }
+    // a MERGE whose source deletes every key
+    val t = filled()
+    GraftSql.register(spark, "gsql_erase_m", t)
+    (0L until 12L).toDF("id").createOrReplaceTempView("gsql_erase_src")
+    GraftSql.sql(spark,
+      """MERGE INTO gsql_erase_m USING gsql_erase_src s ON gsql_erase_m.id = s.id
+        |WHEN MATCHED THEN DELETE""".stripMargin)
+    emptyVersion(t, "gsql_erase_m", "merge")
+  }
+
   test("register(deleteVectors = true) routes SQL DELETE FROM through the merge-on-read verb") {
     val t = tmpTable()
     TableLog.append((0L until 40L).map(i => (i, s"p$i")).toDF("id", "payload")

@@ -26,15 +26,22 @@ class LayoutSpec extends SparkSpec {
     import spark.implicits._
     val rows = Seq((0L, 0L), (1L, 0L), (0L, 1L), (1L, 1L), (5L, 3L), (1023L, 0L), (0L, 1023L))
     val got = rows.toDF("x", "y")
-      .select(col("x"), col("y"), Layout.zorderKey(col("x"), col("y")).as("z"))
+      .select(col("x"), col("y"), Layout.zorderKeyN(Seq(col("x"), col("y"))).as("z"))
       .as[(Long, Long, Long)].collect().map(t => (t._1, t._2) -> t._3).toMap
     def morton(x: Long, y: Long): Long =
       (0 until 16).map(b => (((x >> b) & 1L) << (2 * b)) | (((y >> b) & 1L) << (2 * b + 1))).sum
     rows.foreach { case (x, y) => assert(got((x, y)) == morton(x, y), s"($x,$y)") }
     assert(got((1L, 0L)) == 1L && got((0L, 1L)) == 2L && got((1L, 1L)) == 3L)
+    // q137's oracle SQL, byte for byte as the 2-dim generator spelled
+    // it before the N-dim one took over (x's bit b at 2b, y's at 2b+1)
+    val key2 = (0 until 16).flatMap(b => Seq(
+      s"(((CAST(c_custkey AS BIGINT) >> $b) & 1) << ${2 * b})",
+      s"(((CAST(c_nationkey AS BIGINT) >> $b) & 1) << ${2 * b + 1})")).mkString(" + ")
+    assert(SparkEntry.oracleSql("q137_zorder_key") ==
+      s"SELECT c_custkey,\n  CAST($key2 AS BIGINT) AS zkey\nFROM customer ORDER BY c_custkey")
   }
 
-  test("zorderKeyN: closed-form 3-dim morton; n=2 reproduces zorderKey bit-for-bit") {
+  test("zorderKeyN: closed-form 3-dim morton; key-bit budget") {
     import spark.implicits._
     val rows = Seq((1L, 0L, 0L), (0L, 1L, 0L), (0L, 0L, 1L),
       (5L, 3L, 7L), (1023L, 7L, 15L), (0L, 1023L, 1023L))
@@ -49,12 +56,6 @@ class LayoutSpec extends SparkSpec {
     rows.foreach { case (x, y, z) =>
       assert(got((x, y, z)) == morton3(x, y, z), s"($x,$y,$z)") }
     assert(got((1L, 0L, 0L)) == 1L && got((0L, 1L, 0L)) == 2L && got((0L, 0L, 1L)) == 4L)
-    // n = 2 degenerates to the 2-dim key exactly
-    val twoEq = rows.toDF("x", "y", "z")
-      .select((Layout.zorderKeyN(Seq(col("x"), col("y")), 16) ===
-        Layout.zorderKey(col("x"), col("y"), 16)).as("eq"))
-      .as[Boolean].collect()
-    assert(twoEq.forall(identity), "zorderKeyN(2 dims) must equal zorderKey")
     // key-bit budget: 4 dims × 16 bits = 64 > 63 rejects
     intercept[IllegalArgumentException] {
       Layout.zorderKeyN(Seq(col("x"), col("y"), col("z"), col("x")), 16)

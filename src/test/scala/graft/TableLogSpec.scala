@@ -49,26 +49,22 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("two concurrent writers: one wins, one rebases and retries — no lost update") {
-    val t = tmpTable()
-    TableLog.append(batch(0 until 2), t)
-    var retries = 0
-    var injected = false
-    // deterministic race: writer A resolves base, then writer B's full
-    // append lands BEFORE A publishes → A must lose v(base+1), rebase
-    // onto B's head and win v(base+2)
-    val vA = TableLog.append(batch(10 until 13), t,
-      onRetry = _ => retries += 1,
-      beforeCommit = _ => if (!injected) {
-        injected = true
-        assert(TableLog.append(batch(20 until 24), t) == 2L)
-      })
-    assert(retries == 1, "writer A should have lost exactly one publish race")
-    assert(vA == 3L)
-    assert(ids(TableLog.read(spark, t)) ==
-      ((0L until 2L) ++ (10L until 13L) ++ (20L until 24L)).sorted)
-    // B's batch is visible at v2 without A's
-    assert(ids(TableLog.read(spark, t, Some(2))) ==
-      ((0L until 2L) ++ (20L until 24L)).sorted)
+    RacingLogStore.withStore(spark) { (store, table) =>
+      val t = table()
+      TableLog.append(batch(0 until 2), t)
+      // deterministic race: writer A resolves base and writes its
+      // files, then writer B's full append lands BEFORE A publishes →
+      // A must lose v(base+1), rebase onto B's head and win v(base+2)
+      store.arm(assert(TableLog.append(batch(20 until 24), t) == 2L))
+      val vA = TableLog.append(batch(10 until 13), t)
+      assert(store.losses == 1, "writer A should have lost exactly one publish race")
+      assert(vA == 3L)
+      assert(ids(TableLog.read(spark, t)) ==
+        ((0L until 2L) ++ (10L until 13L) ++ (20L until 24L)).sorted)
+      // B's batch is visible at v2 without A's
+      assert(ids(TableLog.read(spark, t, Some(2))) ==
+        ((0L until 2L) ++ (20L until 24L)).sorted)
+    }
   }
 
   test("two REAL threads appending: every batch exactly once") {
@@ -134,7 +130,7 @@ class TableLogSpec extends SparkSpec {
     assert(ids(TableLog.read(spark, t, Some(1))) == (0L until 5L))
   }
 
-  test("compactZOrder: same rows, versioned layout swap, box scan prunes at the footer") {
+  test("compact(zorder): same rows, versioned layout swap, box scan prunes at the footer") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     def scanRows(df: org.apache.spark.sql.DataFrame): Long = {
       df.collect()
@@ -154,7 +150,7 @@ class TableLogSpec extends SparkSpec {
     val box = (df: org.apache.spark.sql.DataFrame) =>
       df.filter($"y" >= 100 && $"y" < 140)
     val preScan = scanRows(box(TableLog.read(spark, t)))
-    val v = TableLog.compactZOrder(spark, t, "x", "y", numFiles = 16, bits = 10)
+    val v = TableLog.compact(spark, t, numFiles = 16, zorder = Seq("x", "y"))
     assert(v == 2L)
     // identical contents, new layout
     val got = TableLog.read(spark, t).select("payload").collect()
@@ -790,18 +786,16 @@ class TableLogSpec extends SparkSpec {
     }
     val prev = LogStore.register("grafts3", condPut)
     try {
-      // the deterministic 2-writer race through the SEAM: A resolves
-      // its base, B commits first, A loses the conditional put,
-      // rebases, wins the next version
-      TableLog.append(batch(0 until 2), t)
-      var retries = 0; var injected = false
-      val vA = TableLog.append(batch(10 until 13), t,
-        onRetry = _ => retries += 1,
-        beforeCommit = _ => if (!injected) {
-          injected = true
-          assert(TableLog.append(batch(20 until 24), t) == 2L)
-        })
-      assert(retries == 1 && vA == 3L)
+      // the deterministic 2-writer race through the SEAM (a racing
+      // conditional-put store, restored to `condPut` afterwards): A
+      // resolves its base, B commits first, A loses the conditional
+      // put, rebases, wins the next version
+      RacingLogStore.withStore(spark) { (store, _) =>
+        TableLog.append(batch(0 until 2), t)
+        store.arm(assert(TableLog.append(batch(20 until 24), t) == 2L))
+        val vA = TableLog.append(batch(10 until 13), t)
+        assert(store.losses == 1 && vA == 3L)
+      }
       assert(ids(TableLog.read(spark, t)) ==
         ((0L until 2L) ++ (10L until 13L) ++ (20L until 24L)).sorted)
       // exactly-once ledger works through the seam too
@@ -1248,26 +1242,25 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("merge: a lost publish race re-resolves and re-merges on the new head") {
-    val t = tmpTable()
-    TableLog.append(batch(0 until 5), t)
-    var injected = false
-    val v = TableLog.merge(spark, t,
-      Seq((1L, 1L, "U", "u1")).toDF("id", "seq", "op", "payload"),
-      "id", "seq", "op",
-      beforeCommit = base => if (!injected) {
-        injected = true
-        // a competing append wins the version the merge was about to
-        // take — the merge must lose, re-resolve, and re-merge with
-        // the racer's rows present in its result
-        TableLog.append(batch(50 until 52), t)
-      })
-    assert(v == 3L, "merge lands AFTER the racing append")
-    val got = TableLog.read(spark, t).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got(1L) == "u1" && got.contains(50L) && got.contains(51L),
-      "the re-merge must see the racer's rows")
-    assert(TableLog.history(spark, t).map(_.action) ==
-      Seq("append", "append", "merge"))
+    RacingLogStore.withStore(spark) { (store, table) =>
+      val t = table()
+      TableLog.append(batch(0 until 5), t)
+      // a competing append wins the version the merge was about to
+      // take — the merge must lose, re-resolve, and re-merge with the
+      // racer's rows present in its result
+      store.arm(TableLog.append(batch(50 until 52), t))
+      val v = TableLog.merge(spark, t,
+        Seq((1L, 1L, "U", "u1")).toDF("id", "seq", "op", "payload"),
+        "id", "seq", "op")
+      assert(store.losses == 1)
+      assert(v == 3L, "merge lands AFTER the racing append")
+      val got = TableLog.read(spark, t).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got(1L) == "u1" && got.contains(50L) && got.contains(51L),
+        "the re-merge must see the racer's rows")
+      assert(TableLog.history(spark, t).map(_.action) ==
+        Seq("append", "append", "merge"))
+    }
   }
 
   test("clone fence: source retention refuses while a live clone shares files, releases on materialize/detach/drop") {
