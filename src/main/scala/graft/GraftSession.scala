@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.functions.GraftExtensions
 
 /** Canonical session factory: the configuration every graft
   * deployment wants, sized by a cores hint instead of Spark's
@@ -42,11 +43,7 @@ object GraftSession {
       // + Tables.events normalizes to micros
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // a collected root ORDER BY sorts on the driver (plans.CollectSort);
-      // a bare count of a TableLog snapshot reads the manifest
-      // (plans.MetadataCount)
-      .withExtensions { e =>
-        e.injectQueryStagePrepRule(_ => graft.plans.CollectSort)
-        e.injectOptimizerRule(_ => graft.plans.MetadataCount)
-      }
+      // graft's rules, strategy and SQL functions (CollectSort,
+      // MetadataCount, the top-k rewrites, vec_dot, ...)
+      .withExtensions(new GraftExtensions)
 }

@@ -1,28 +1,32 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.HIGH_ORDER_FUNCTION
 import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType}
 
-/** Session extension wiring for graft's custom Catalyst pieces:
+/** The one list of graft's Catalyst extensions, injected when a
+  * session is built (registered by [[graft.GraftSession.builder]]),
+  * so every graft session plans with the same rules from its first
+  * query, and so does every `newSession()` of it:
   *
-  *  - `vec_dot(a, b)` registered as a SQL function, so
-  *    `spark.sql("SELECT vec_dot(e, e) FROM ...")` plans the native
-  *    expression;
-  *  - RewriteVecDot: an optimizer rule that recognizes the
-  *    idiomatic-but-interpreted HOF spelling
+  *  - SQL functions `vec_dot`, `duck_round`, `shingle_explode` and
+  *    `span_explode`, so `spark.sql` plans the native expressions;
+  *  - optimizer rules, in the operator-optimization batch:
+  *    RewriteVecDot (the interpreted HOF dot-product spelling
   *    `aggregate(zip_with(a, b, (x,y) -> x*y), 0.0D, (acc,v) -> acc+v)`
-  *    and replaces it with the codegen'd VecDot — users keep writing
-  *    declarative code, the optimizer picks the fast plan (the whole
-  *    Catalyst philosophy in one rule).
+  *    becomes the codegen'd VecDot), RewriteSimTopK, RewriteWindowTopK
+  *    and MetadataCount;
+  *  - the TopKPerKey planner strategy;
+  *  - CollectSort, an AQE query-stage-preparation rule.
   *
-  * Use at session build: `.config("spark.sql.extensions",
-  * "graft.functions.GraftExtensions")` or `.withExtensions(new
-  * GraftExtensions)`; on a live session call
-  * `GraftExtensions.install(spark)`.
+  * Users keep writing declarative code; the optimizer picks the fast
+  * plan. Extensions are injected here and nowhere else: a session
+  * without them (a rules-off differential) is the factory minus its
+  * one registration call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -33,7 +37,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => RewriteVecDot)
     e.injectOptimizerRule(_ => graft.plans.RewriteSimTopK)
     e.injectOptimizerRule(_ => graft.plans.RewriteWindowTopK)
+    e.injectOptimizerRule(_ => graft.plans.MetadataCount)
     e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
+    e.injectQueryStagePrepRule(_ => graft.plans.CollectSort)
   }
 }
 
@@ -83,32 +89,6 @@ object GraftExtensions {
       require(exprs.length == 2, "span_explode(text, n) takes exactly 2 arguments")
       SpanExplode(exprs.head, intLit(exprs(1), "span_explode"))
     })
-
-  /** Register on an already-running session (function registry +
-    * experimental optimizer rules + planner strategies). Idempotent:
-    * every piece is check-before-put, so a second install (Bench
-    * warmup + main pass, or a shared session extended twice) is a
-    * no-op — no `replaced a previously registered function` WARN in
-    * deployment logs. */
-  def install(spark: SparkSession): Unit = {
-    Seq(vecDotDescription, duckRoundDescription,
-        shingleExplodeDescription, spanExplodeDescription)
-      .foreach { case (ident, _, builder) =>
-        if (!spark.sessionState.functionRegistry.functionExists(ident))
-          spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-            ident.funcName, builder, "built-in")
-      }
-    if (!spark.experimental.extraOptimizations.contains(RewriteVecDot))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteVecDot
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteSimTopK))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteSimTopK
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteWindowTopK))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteWindowTopK
-    graft.plans.TopKPerKeyStrategy.setup(spark)
-  }
 }
 
 /** aggregate(zip_with(a, b, multiply), 0.0, add) → VecDot(a, b).
@@ -128,17 +108,20 @@ object RewriteVecDot extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-    case ArrayAggregate(
-          ZipWith(a, b,
-            LambdaFunction(Multiply(mx, my, _), Seq(x: NamedLambdaVariable, y: NamedLambdaVariable), _)),
-          Literal(0.0, DoubleType),
-          LambdaFunction(Add(accRef: NamedLambdaVariable, vRef: NamedLambdaVariable, _),
-            Seq(acc: NamedLambdaVariable, v: NamedLambdaVariable), _),
-          LambdaFunction(finishRef: NamedLambdaVariable, Seq(finishArg: NamedLambdaVariable), _))
-        if (isDoubleOf(mx, x) && isDoubleOf(my, y)) &&
-           accRef.exprId == acc.exprId && vRef.exprId == v.exprId &&
-           finishRef.exprId == finishArg.exprId =>
-      VecDot(a, b)
-  }
+  // every graft session runs this rule on every plan: skip plans
+  // without a higher-order function on their cached pattern bits
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformAllExpressionsWithPruning(_.containsPattern(HIGH_ORDER_FUNCTION)) {
+      case ArrayAggregate(
+            ZipWith(a, b,
+              LambdaFunction(Multiply(mx, my, _), Seq(x: NamedLambdaVariable, y: NamedLambdaVariable), _)),
+            Literal(0.0, DoubleType),
+            LambdaFunction(Add(accRef: NamedLambdaVariable, vRef: NamedLambdaVariable, _),
+              Seq(acc: NamedLambdaVariable, v: NamedLambdaVariable), _),
+            LambdaFunction(finishRef: NamedLambdaVariable, Seq(finishArg: NamedLambdaVariable), _))
+          if (isDoubleOf(mx, x) && isDoubleOf(my, y)) &&
+             accRef.exprId == acc.exprId && vRef.exprId == v.exprId &&
+             finishRef.exprId == finishArg.exprId =>
+        VecDot(a, b)
+    }
 }

@@ -64,25 +64,30 @@ object Guards {
     * MATERIALIZES the shuffle stages at floor-call time — the
     * returned `df.repartition(n)` then builds a fresh plan that
     * re-executes them (double execution). Every legitimate call site
-    * is a scan/select/generate (the single-row-group fixture shape);
-    * a frame whose optimized plan contains any shuffle-introducing
-    * operator (aggregate, join, window, sort, distinct, repartition,
-    * global limit) gets its parallelism from AQE and is returned
+    * is a scan/select/generate (the single-row-group fixture shape),
+    * so the check is an ALLOWLIST of operators known not to shuffle:
+    * relation leaves (file scans, checkpointed `LogicalRDD`s — they
+    * hide their upstream and stay floorable — local relations,
+    * ranges), Project, Filter, Generate and Union. A frame whose
+    * optimized plan holds anything else (an aggregate, join, window, sort,
+    * typed `groupByKey`/`cogroup`, or an operator this list has never
+    * heard of) gets its parallelism from AQE and is returned
     * UNCHANGED — and `.rdd` is never touched for it. The check reads
     * the LOGICAL plan because exchanges are only inserted by the
     * executedPlan preparation rules, and building THAT under AQE is
-    * exactly the materialization this guard exists to avoid.
-    * Checkpointed inputs (LogicalRDD leaves) hide their upstream and
-    * stay floorable. OpsSpec G1/G2 pin pass-through and floor. */
+    * exactly the materialization this guard exists to avoid. OpsSpec
+    * G1/G2/G3 pin pass-through and floor. */
   def parallelismFloor(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df // .rdd is illegal on streaming frames
     import org.apache.spark.sql.catalyst.plans.logical._
-    val shuffly = df.queryExecution.optimizedPlan.exists {
-      case _: Aggregate | _: Join | _: Window | _: Sort | _: Deduplicate |
-           _: RepartitionOperation | _: GlobalLimit => true
-      case _ => false
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val unknown = df.queryExecution.optimizedPlan.exists {
+      case _: LogicalRelation | _: LogicalRDD | _: LocalRelation | _: Range |
+           _: Project | _: Filter | _: Generate | _: Union => false
+      case _ => true
     }
-    if (shuffly) return df // AQE owns post-shuffle parallelism
+    if (unknown) return df // AQE owns post-shuffle parallelism
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }

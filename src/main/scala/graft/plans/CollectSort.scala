@@ -30,7 +30,8 @@ import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExch
   * adaptive root is the write node) keep their plan. Sessions with AQE
   * off never run query-stage-preparation rules.
   *
-  * Registered once, in [[graft.GraftSession.builder]].
+  * Injected with the other extensions by
+  * [[graft.functions.GraftExtensions]].
   */
 object CollectSort extends Rule[SparkPlan] {
   override def apply(plan: SparkPlan): SparkPlan = plan match {

@@ -36,7 +36,8 @@ import graft.sinks.{ManifestFileIndex, TableLog}
   * vector is never in such a listing, so a DV'd version keeps the
   * scan until a compact materializes the vectors.
   *
-  * Registered once, in [[graft.GraftSession.builder]].
+  * Injected with the other extensions by
+  * [[graft.functions.GraftExtensions]].
   */
 object MetadataCount extends Rule[LogicalPlan] {
 

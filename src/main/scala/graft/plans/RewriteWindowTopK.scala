@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.WINDOW
 import org.apache.spark.sql.types._
 
 /** Optimizer rule: rewrite the idiomatic window top-k pattern
@@ -60,39 +61,41 @@ object RewriteWindowTopK extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case Project(projectList, Filter(cond, w: Window))
-        if w.partitionSpec.nonEmpty =>
-      val rewritten = for {
-        rnAttr <- w.windowExpressions match {
-          case Seq(a @ Alias(WindowExpression(_: RowNumber, _), _)) =>
-            Some(a.toAttribute)
-          case _ => None
+  // every graft session runs this rule on every plan: skip plans
+  // without a Window on their cached pattern bits
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformWithPruning(_.containsPattern(WINDOW)) {
+      case Project(projectList, Filter(cond, w: Window))
+          if w.partitionSpec.nonEmpty =>
+        val rewritten = for {
+          rnAttr <- w.windowExpressions match {
+            case Seq(a @ Alias(WindowExpression(_: RowNumber, _), _)) =>
+              Some(a.toAttribute)
+            case _ => None
+          }
+          k <- limitOf(cond, rnAttr)
+          (score, tie) <- w.orderSpec match {
+            case Seq(SortOrder(s, Descending, NullsLast, _),
+                     SortOrder(t, Ascending, NullsFirst, _))
+                if !s.nullable && exactDoubleCast(s.dataType) &&
+                   integral(t.dataType) => Some((s, t))
+            case _ => None
+          }
+          // rank must die here: project references only child columns
+          if projectList.forall(_.references.subsetOf(w.child.outputSet))
+        } yield {
+          // Spark's InferWindowGroupLimit inserts a sort-based
+          // WindowGroupLimit under the Window for exactly this pattern
+          // if it ran first — redundant under the heap operator, which
+          // has its own sort-free partial phase. Strip it.
+          val child = w.child match {
+            case wgl: WindowGroupLimit if wgl.limit >= k => wgl.child
+            case c => c
+          }
+          Project(projectList,
+            TopKPerKeyPlan(w.partitionSpec,
+              Cast(score, DoubleType), Cast(tie, LongType), k, child))
         }
-        k <- limitOf(cond, rnAttr)
-        (score, tie) <- w.orderSpec match {
-          case Seq(SortOrder(s, Descending, NullsLast, _),
-                   SortOrder(t, Ascending, NullsFirst, _))
-              if !s.nullable && exactDoubleCast(s.dataType) &&
-                 integral(t.dataType) => Some((s, t))
-          case _ => None
-        }
-        // rank must die here: project references only child columns
-        if projectList.forall(_.references.subsetOf(w.child.outputSet))
-      } yield {
-        // Spark's InferWindowGroupLimit (main optimizer batch, runs
-        // before user rules) inserts a sort-based WindowGroupLimit
-        // under the Window for exactly this pattern — redundant under
-        // the heap operator, which has its own sort-free partial
-        // phase. Strip it.
-        val child = w.child match {
-          case wgl: WindowGroupLimit if wgl.limit >= k => wgl.child
-          case c => c
-        }
-        Project(projectList,
-          TopKPerKeyPlan(w.partitionSpec,
-            Cast(score, DoubleType), Cast(tie, LongType), k, child))
-      }
-      rewritten.getOrElse(Project(projectList, Filter(cond, w)))
-  }
+        rewritten.getOrElse(Project(projectList, Filter(cond, w)))
+    }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder, UnsafeProjection}
@@ -23,8 +23,9 @@ import org.apache.spark.sql.types.DoubleType
   * global top-k runs as TakeOrderedAndProject, applied per key.
   *
   * Full custom-operator stack (SURVEY.md §7.3 preference (c)):
-  * logical UnaryNode → planner Strategy (injected by GraftExtensions
-  * or used directly via TopKPerKey.apply) → UnaryExecNode whose
+  * logical UnaryNode (built by RewriteWindowTopK or directly by
+  * TopKPerKey.apply) → planner Strategy (injected by GraftExtensions,
+  * so only a graft session can plan the node) → UnaryExecNode whose
   * doExecute runs the heap. Semantics: score descending, tiebreak
   * ascending — identical to the window formulation (TopKSpec proves
   * equality row-for-row).
@@ -38,11 +39,6 @@ final case class TopKPerKeyPlan(
 }
 
 object TopKPerKeyStrategy extends SparkStrategy {
-  /** Registers the strategy on a live session, once (idempotent). */
-  def setup(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(this))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ this
-
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKeyPlan(keys, score, tiebreak, k, child) =>
       // Two-phase, like partial aggregation: the map-side (partial)
@@ -144,7 +140,6 @@ object TopKPerKey {
       analyzed.output.find(_.name == n).getOrElse(
         throw new IllegalArgumentException(
           s"column '$n' not in ${analyzed.output.map(_.name).mkString(", ")}"))
-    TopKPerKeyStrategy.setup(spark)
     DatasetBridge.ofRows(spark,
       TopKPerKeyPlan(
         keyCols.map(attr),

@@ -339,10 +339,11 @@ object MiscQueries {
     // ---------------------------------------------------------------- q57
     // Declarative window top-k, auto-rewritten: the user writes the
     // idiomatic row_number-over-window-then-filter spelling; the
-    // RewriteWindowTopK optimizer rule (GraftExtensions) replaces it
-    // with the TopKPerKey bounded-heap plan. Same rows as the window
-    // form — RewriteTopKSpec proves the plan swap, this query proves
-    // value parity against the window-formulated oracle.
+    // RewriteWindowTopK optimizer rule, which every graft session
+    // carries from its build (GraftExtensions), replaces it with the
+    // TopKPerKey bounded-heap plan. Same rows as the window form —
+    // RewriteTopKSpec proves the plan swap, this query proves value
+    // parity against the window-formulated oracle.
     Q("q57_window_topk_rewrite",
       """WITH t AS (SELECT o_custkey, o_orderkey,
         |                  coalesce(CAST(o_totalprice AS DOUBLE), 0.0) AS price
@@ -353,7 +354,6 @@ object MiscQueries {
         |      FROM t)
         |SELECT o_custkey, o_orderkey, price FROM r WHERE rn <= 3
         |ORDER BY o_custkey, o_orderkey""".stripMargin) { (s, d) =>
-      graft.functions.GraftExtensions.install(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("o_custkey"))
         .orderBy(col("price").desc, col("o_orderkey").asc)

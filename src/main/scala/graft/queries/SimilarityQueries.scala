@@ -1539,7 +1539,8 @@ object SimilarityQueries {
     // Similarity top-k REWRITE (SURVEY §4/§7.3's custom planner
     // strategy): the Spark side runs the PLAIN brute-force spelling —
     // the same declarative code as q34 — with an IVF store registered
-    // for the corpus, and RewriteSimTopK substitutes the store-served
+    // for the corpus, and RewriteSimTopK (a GraftExtensions optimizer
+    // rule on every graft session) substitutes the store-served
     // bound-pruned plan (triangle-inequality cell pruning: provably
     // EXACT on any data, so the oracle is plain brute force — unlike
     // the approximate serves q153/q154, which the planner never
@@ -1562,7 +1563,6 @@ object SimilarityQueries {
          |      FROM s)
          |SELECT qid, nid, rnk, sim FROM r WHERE rnk <= $TOP_K
          |ORDER BY qid, rnk""".stripMargin) { (s, d) =>
-      graft.functions.GraftExtensions.install(s)
       val e = Tables.embeddings(s, d)
       val (cent, _, coarse, _) = ivfPqStores(s, d)
       val h = graft.plans.RewriteSimTopK.register(e, coarse, cent, label = s"q178:$d")

@@ -311,11 +311,11 @@ object TableLog {
     * (plain, `where`, `zorder`, compactSmallFiles) only rewrite
     * satisfying rows, so they carry the set untouched. */
   def addConstraint(spark: SparkSession, table: String, name: String,
-                    expression: String, maxRetries: Int = 10): Long = {
+                    expression: String): Long = {
     require(name.nonEmpty && name.forall(c =>
       c.isLetterOrDigit || c == '_' || c == '-'),
       s"addConstraint: name must be [A-Za-z0-9_-]+, got '$name'")
-    commitOnHead(spark, table, "addConstraint", maxRetries) { m =>
+    commitOnHead(spark, table, "addConstraint") { m =>
       require(!m.constraints.contains(name),
         s"TableLog.addConstraint: constraint '$name' already exists on $table" +
           s" (${m.constraints(name)}) — dropConstraint first")
@@ -329,9 +329,8 @@ object TableLog {
   /** DROP a named CHECK constraint — the loud inverse; a missing name
     * throws (a silent no-op would hide a typo'd drop that leaves the
     * constraint enforcing). */
-  def dropConstraint(spark: SparkSession, table: String, name: String,
-                     maxRetries: Int = 10): Long =
-    commitOnHead(spark, table, "dropConstraint", maxRetries) { m =>
+  def dropConstraint(spark: SparkSession, table: String, name: String): Long =
+    commitOnHead(spark, table, "dropConstraint") { m =>
       require(m.constraints.contains(name),
         s"TableLog.dropConstraint: no constraint '$name' on $table " +
           s"(have: ${m.constraints.keys.toSeq.sorted.mkString(", ")})")
@@ -983,6 +982,9 @@ object TableLog {
                                    constraints: Map[String, String],
                                    dvs: Map[String, DvRef] = Map.empty) extends Attempt
 
+  /** Lost publish races a write verb retries before it fails. */
+  private val MaxRetries = 10
+
   /** THE optimistic commit loop every write verb runs: each pass
     * re-resolves the head and runs the verb's `attempt` on it. A
     * [[Finished]] answer returns; a [[Publish]] goes out as version
@@ -992,10 +994,10 @@ object TableLog {
     * racing commit may have added rows they must see — the loser's
     * files become vacuum-able orphans). Returns the committed (or
     * finished) version. */
-  private def commitLoop(spark: SparkSession, table: String, verb: String,
-                         maxRetries: Int)(attempt: Option[Resolved] => Attempt): Option[Long] = {
+  private def commitLoop(spark: SparkSession, table: String, verb: String)(
+      attempt: Option[Resolved] => Attempt): Option[Long] = {
     var tries = 0
-    while (tries <= maxRetries) {
+    while (tries <= MaxRetries) {
       val head = headResolved(spark, table)
       attempt(head) match {
         case Finished(v) => return v
@@ -1011,14 +1013,14 @@ object TableLog {
       tries += 1
     }
     throw new IllegalStateException(
-      s"TableLog.$verb: lost the publish race $maxRetries times on $table")
+      s"TableLog.$verb: lost the publish race $MaxRetries times on $table")
   }
 
   /** [[commitLoop]] for the verbs that need an existing table: the
     * attempt gets the head snapshot, and an empty table throws. */
-  private def commitOnHead(spark: SparkSession, table: String, verb: String,
-                           maxRetries: Int)(attempt: Manifest => Attempt): Long =
-    commitLoop(spark, table, verb, maxRetries) { r =>
+  private def commitOnHead(spark: SparkSession, table: String, verb: String)(
+      attempt: Manifest => Attempt): Long =
+    commitLoop(spark, table, verb) { r =>
       require(r.nonEmpty, s"TableLog.$verb: $table has no committed version")
       attempt(r.get.m)
     }.get
@@ -1099,14 +1101,13 @@ object TableLog {
     * lists only the added files, O(Δ) bytes. Optimistic: on losing
     * the publish race the ALREADY-WRITTEN data files are re-based
     * onto the new head (no data rewrite — appends always merge) and
-    * the commit retries, up to `maxRetries`. Schema is ENFORCED
+    * the commit retries, up to `MaxRetries` times. Schema is ENFORCED
     * against the table's committed one ([[commitSchema]]): type
     * changes throw, new columns throw unless `evolve = true` (then
     * the stored schema widens and every older file null-fills them at
     * read). Returns the committed version. */
-  def append(df: DataFrame, table: String, maxRetries: Int = 10,
-             evolve: Boolean = false): Long =
-    appendFiles(df, table, "append", maxRetries, evolve, txn = None).get
+  def append(df: DataFrame, table: String, evolve: Boolean = false): Long =
+    appendFiles(df, table, "append", evolve, txn = None).get
 
   /** EXACTLY-ONCE streaming append — the foreachBatch face of the
     * log (use via [[exactlyOnceSink]]): each commit records the
@@ -1120,10 +1121,10 @@ object TableLog {
     * vacuum-able orphan. `appId` must be stable across restarts (use
     * the streaming query's id, a UUID) and contain no ` ;:`. */
   def appendStreamBatch(df: DataFrame, table: String, appId: String,
-                        batchId: Long, maxRetries: Int = 10): Option[Long] = {
+                        batchId: Long): Option[Long] = {
     require(appId.nonEmpty && !appId.exists(c => c == ' ' || c == ';' || c == ':'),
       s"appendStreamBatch: appId must be non-empty without ' ;:', got '$appId'")
-    appendFiles(df, table, "appendStreamBatch", maxRetries, evolve = false,
+    appendFiles(df, table, "appendStreamBatch", evolve = false,
       txn = Some(appId -> batchId))
   }
 
@@ -1138,13 +1139,13 @@ object TableLog {
     * same batch wins nothing twice). The data is written ONCE; each
     * attempt re-derives the schema (a racing writer may have evolved
     * the table) and re-bases the written files onto the head. */
-  private def appendFiles(df: DataFrame, table: String, verb: String, maxRetries: Int,
+  private def appendFiles(df: DataFrame, table: String, verb: String,
                           evolve: Boolean, txn: Option[(String, Long)]): Option[Long] = {
     val spark = df.sparkSession
     if (txn.nonEmpty && replayed(headResolved(spark, table).map(_.m), txn)) return None
     val (newFiles, newStats) = writeData(df, table)
     val enforce = constraintsOnWritten(spark, table, newFiles, df.schema, verb)
-    commitLoop(spark, table, verb, maxRetries) { r =>
+    commitLoop(spark, table, verb) { r =>
       val m = r.map(_.m)
       if (replayed(m, txn)) Finished(None) // raced replay
       else {
@@ -1184,7 +1185,7 @@ object TableLog {
     * flag: one accidental overwrite with a drifted frame must not
     * silently rewrite the table contract for every downstream
     * reader). Pinned readers below keep the old schema either way. */
-  def overwrite(df: DataFrame, table: String, maxRetries: Int = 10,
+  def overwrite(df: DataFrame, table: String,
                 overwriteSchema: Boolean = false): Long = {
     val spark = df.sparkSession
     // the replacement contents must satisfy the standing contract
@@ -1193,7 +1194,7 @@ object TableLog {
     // in analysis — never a silent drop)
     val (newFiles, newStats) = writeData(df, table)
     val enforce = constraintsOnWritten(spark, table, newFiles, df.schema, "overwrite")
-    commitLoop(spark, table, "overwrite", maxRetries) { r =>
+    commitLoop(spark, table, "overwrite") { r =>
       val m = r.map(_.m)
       val schema =
         if (overwriteSchema) Some(deepNullable(df.schema))
@@ -1254,11 +1255,10 @@ object TableLog {
     * REWRITES (rebase is unsound for a rewrite). */
   def compact(spark: SparkSession, table: String, numFiles: Int = 1,
               where: Option[org.apache.spark.sql.Column] = None,
-              zorder: Seq[String] = Seq.empty, maxRetries: Int = 10): Long = {
+              zorder: Seq[String] = Seq.empty): Long = {
     require(numFiles >= 1, s"compact: numFiles must be >= 1, got $numFiles")
     compactTouched(spark, table, "compact",
-      m => where.fold(m.files)(survivors(spark, table, m, _)), numFiles, zorder,
-      maxRetries)
+      m => where.fold(m.files)(survivors(spark, table, m, _)), numFiles, zorder)
   }
 
   /** AUTO-COMPACT: fold the table's SMALL data files (physical length
@@ -1274,7 +1274,7 @@ object TableLog {
     * materialize through the rewrite like any OPTIMIZE. */
   def compactSmallFiles(spark: SparkSession, table: String,
                         smallBytes: Long = 8L << 20, minSmallFiles: Int = 4,
-                        numFiles: Int = 1, maxRetries: Int = 10): Long = {
+                        numFiles: Int = 1): Long = {
     require(numFiles >= 1, s"compactSmallFiles: numFiles must be >= 1, got $numFiles")
     require(minSmallFiles >= 2,
       s"compactSmallFiles: folding fewer than 2 files is never useful, got $minSmallFiles")
@@ -1287,7 +1287,7 @@ object TableLog {
         }
         if (small.length >= minSmallFiles) small else Seq.empty
       },
-      numFiles, Seq.empty, maxRetries)
+      numFiles, Seq.empty)
   }
 
   /** [[append]] + [[compactSmallFiles]] under one call — the
@@ -1313,9 +1313,8 @@ object TableLog {
     * a side effect; a scoped one keeps the head's. */
   private def compactTouched(spark: SparkSession, table: String,
                              verb: String, select: Manifest => Seq[String],
-                             numFiles: Int, zorder: Seq[String],
-                             maxRetries: Int): Long =
-    commitOnHead(spark, table, verb, maxRetries) { m =>
+                             numFiles: Int, zorder: Seq[String]): Long =
+    commitOnHead(spark, table, verb) { m =>
       val touched = select(m)
       if (touched.isEmpty) Finished(Some(m.version)) // nothing to optimize
       else {
@@ -1375,10 +1374,9 @@ object TableLog {
     * a big table): [[merge]] below is the O(touched files) MERGE INTO
     * with source-wins changelog semantics and a stats-pruned touch
     * set — prefer it whenever the keys are range-clustered. */
-  def upsert(fresh: DataFrame, table: String, keys: Seq[String],
-             maxRetries: Int = 10): Long = {
+  def upsert(fresh: DataFrame, table: String, keys: Seq[String]): Long = {
     val spark = fresh.sparkSession
-    commitLoop(spark, table, "upsert", maxRetries) { r =>
+    commitLoop(spark, table, "upsert") { r =>
       val m = r.map(_.m)
       // strict enforcement on the INCOMING side (merge never evolves);
       // the commit carries the enforced table schema through
@@ -1460,9 +1458,8 @@ object TableLog {
     * review-crawler/restaurant_save.py:77-130 IS this merge, one row
     * at a time. */
   def merge(spark: SparkSession, table: String, changes: DataFrame,
-            keyCol: String, seqCol: String, opCol: String,
-            maxRetries: Int = 10): Long =
-    mergeImpl(spark, table, changes, keyCol, seqCol, opCol, maxRetries, txn = None).get
+            keyCol: String, seqCol: String, opCol: String): Long =
+    mergeImpl(spark, table, changes, keyCol, seqCol, opCol, txn = None).get
 
   /** EXACTLY-ONCE STREAMING MERGE — [[merge]]'s foreachBatch face
     * (use via [[upsertSink]]), completing the streaming-hop triad:
@@ -1479,14 +1476,13 @@ object TableLog {
     * the ledger must advance or the replay check never clears). */
   def mergeStreamBatch(spark: SparkSession, table: String, changes: DataFrame,
                        keyCol: String, seqCol: String, opCol: String,
-                       appId: String, batchId: Long,
-                       maxRetries: Int = 10): Option[Long] = {
+                       appId: String, batchId: Long): Option[Long] = {
     require(appId.nonEmpty && !appId.exists(c => c == ' ' || c == ';' || c == ':'),
       s"mergeStreamBatch: appId must be non-empty without ' ;:', got '$appId'")
     // cheap ledger check before paying the changelog localCheckpoint
     val txn = Some(appId -> batchId)
     if (replayed(headResolved(spark, table).map(_.m), txn)) return None
-    mergeImpl(spark, table, changes, keyCol, seqCol, opCol, maxRetries, txn)
+    mergeImpl(spark, table, changes, keyCol, seqCol, opCol, txn)
   }
 
   /** The writeStream sink for a CDC-shaped stream — each micro-batch
@@ -1507,7 +1503,7 @@ object TableLog {
     * existing head (a stream's bootstrap attempt needs neither). */
   private def mergeImpl(spark: SparkSession, table: String, changes: DataFrame,
                         keyCol: String, seqCol: String, opCol: String,
-                        maxRetries: Int, txn: Option[(String, Long)]): Option[Long] = {
+                        txn: Option[(String, Long)]): Option[Long] = {
     import org.apache.spark.sql.functions.{col, lit, max, min}
     lazy val ch = changes.localCheckpoint(true)
     // the change-key domain as a pruning predicate; None = no non-null
@@ -1559,7 +1555,7 @@ object TableLog {
               col(keyCol) >= lit(r.get(0)) && col(keyCol) <= lit(r.get(1)))
           }
       }
-    commitLoop(spark, table, "merge", maxRetries) {
+    commitLoop(spark, table, "merge") {
       case None =>
         require(txn.nonEmpty,
           s"TableLog.merge: $table has no committed version — append the " +
@@ -1679,10 +1675,9 @@ object TableLog {
     * contract, not a leak (erasure compliance = delete + expire +
     * vacuum, in that order). */
   def delete(spark: SparkSession, table: String,
-             predicate: org.apache.spark.sql.Column,
-             maxRetries: Int = 10): Long = {
+             predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    commitOnHead(spark, table, "delete", maxRetries) { m =>
+    commitOnHead(spark, table, "delete") { m =>
       val touched = survivors(spark, table, m, predicate)
       if (touched.isEmpty) Finished(Some(m.version)) // stats prove nothing matches
       else {
@@ -1753,12 +1748,11 @@ object TableLog {
     * scale. */
   def deleteVectors(spark: SparkSession, table: String,
                     predicate: org.apache.spark.sql.Column,
-                    maxDvFraction: Double = 0.5,
-                    maxRetries: Int = 10): Long = {
+                    maxDvFraction: Double = 0.5): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     require(maxDvFraction >= 0.0 && maxDvFraction <= 1.0,
       s"deleteVectors: maxDvFraction must be in [0, 1], got $maxDvFraction")
-    commitOnHead(spark, table, "deleteVectors", maxRetries) { m =>
+    commitOnHead(spark, table, "deleteVectors") { m =>
       val touched = survivors(spark, table, m, predicate)
       if (touched.isEmpty) Finished(Some(m.version)) // stats prove nothing matches
       else {
@@ -1853,10 +1847,9 @@ object TableLog {
     * contract, documented Delta behavior). Commits as a rewrite
     * action: incremental/streaming consumers fail loudly across it
     * and re-snapshot. */
-  def restore(spark: SparkSession, table: String, version: Long,
-              maxRetries: Int = 10): Long = {
+  def restore(spark: SparkSession, table: String, version: Long): Long = {
     val target = manifest(spark, table, Some(version)) // loud if expired
-    commitOnHead(spark, table, "restore", maxRetries) { m =>
+    commitOnHead(spark, table, "restore") { m =>
       require(version <= m.version,
         s"TableLog.restore: version $version is ahead of head ${m.version}")
       if (version == m.version) Finished(Some(m.version)) // already there: no-op

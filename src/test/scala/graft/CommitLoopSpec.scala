@@ -28,10 +28,10 @@ class CommitLoopSpec extends AnyFunSuite {
   private def count(s: String, needle: String): Int = needle.r.findAllMatchIn(s).size
 
   test("one optimistic retry loop and one lost-race error; cloneShallow's one-shot v1 publish is the exception") {
-    assert(count(src, """while\s*\(\s*\w+\s*<=\s*maxRetries\s*\)""") == 1,
+    assert(count(src, """while\s*\(\s*\w+\s*<=\s*MaxRetries\s*\)""") == 1,
       "every write verb must run the one commit loop")
     assert(count(src, "lost the publish race") == 2)
-    assert(count(src, """lost the publish race \$maxRetries times""") == 1)
+    assert(count(src, """lost the publish race \$MaxRetries times""") == 1)
     val clone = defs.collect { case ("cloneShallow", body) => body }
     assert(clone.size == 1 && clone.head.contains("lost the publish race on"),
       "the only other lost-race message is cloneShallow's")

@@ -1,18 +1,15 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftExtensions
 import graft.sources.Tables
 
 /** GraftExtensions: SQL function registration + the HOF→VecDot
-  * optimizer rewrite. */
+  * optimizer rewrite, on the factory session as built — no suite
+  * registers anything itself. */
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val installed: Unit = GraftExtensions.install(spark)
-
   test("vec_dot callable from SQL") {
-    installed
     Tables.embeddings(spark, sf("sf0.001")).limit(5).createOrReplaceTempView("emb_ext")
     val rows = spark.sql(
       "SELECT vec_id, vec_dot(embedding, embedding) AS n2 FROM emb_ext").collect()
@@ -20,7 +17,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("optimizer rewrites aggregate(zip_with(...)) to native VecDot") {
-    installed
     val e = Tables.embeddings(spark, sf("sf0.001"))
     val hof = e.select(
       aggregate(
@@ -33,20 +29,26 @@ class ExtensionsSpec extends SparkSpec {
     assert(hof.except(nat).count() == 0 && nat.except(hof).count() == 0)
   }
 
-  test("double install is a no-op (no duplicate registration)") {
-    installed
-    val rulesBefore = spark.experimental.extraOptimizations
-    val stratsBefore = spark.experimental.extraStrategies
-    GraftExtensions.install(spark)
-    assert(spark.experimental.extraOptimizations == rulesBefore)
-    assert(spark.experimental.extraStrategies == stratsBefore)
-    // function still resolves, registered exactly once
-    assert(spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot")))
+  test("a newSession() of the factory session carries every extension") {
+    // extensions are injected at build, so a child session shares them;
+    // a live-session registration would have touched only its parent
+    val child = spark.newSession()
+    child.createDataFrame(Seq((1L, Seq(1.0, 2.0)))).toDF("id", "v")
+      .createOrReplaceTempView("v_child")
+    assert(child.sql("SELECT vec_dot(v, v) FROM v_child").head().getDouble(0) == 5.0)
+    // q57's declarative window top-k plans the heap operator
+    val w = org.apache.spark.sql.expressions.Window.partitionBy($"o_custkey")
+      .orderBy($"price".desc, $"o_orderkey".asc)
+    val topk = Tables.orders(child, sf("sf0.001"))
+      .select($"o_custkey", $"o_orderkey",
+        coalesce($"o_totalprice".cast("double"), lit(0.0)).as("price"))
+      .withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 3).drop("rn")
+    val physical = topk.queryExecution.executedPlan.toString
+    assert(physical.contains("TopKPerKey "), physical)
   }
 
   test("shingle_explode and span_explode callable from SQL") {
-    installed
     Seq((1L, "a b c d"), (2L, "x y")).toDF("doc_id", "text")
       .createOrReplaceTempView("docs_ext")
     val sh = spark.sql(
@@ -66,7 +68,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("rewrite does not fire on non-dot folds") {
-    installed
     val e = Tables.embeddings(spark, sf("sf0.001"))
     val sumFold = e.select(
       aggregate(zip_with($"embedding", $"embedding", (x, y) => x.cast("double") + y.cast("double")),

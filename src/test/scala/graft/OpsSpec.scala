@@ -179,4 +179,53 @@ class OpsSpec extends SparkSpec {
     assert(out.rdd.getNumPartitions ==
       spark.sparkContext.defaultParallelism)
   }
+
+  test("G3 parallelismFloor passes a typed grouped frame through with zero jobs") {
+    // typed groupByKey/mapGroups plans MapGroups over an exchange; the
+    // floor must not know it by name to leave it alone (.rdd unread)
+    val grouped = (1 to 100).toDS().groupByKey(_ % 7)
+      .mapGroups((k, it) => (k, it.size)).toDF("k", "n")
+    val (out, jobs) = jobsIn(Guards.parallelismFloor(grouped))
+    assert(out eq grouped)
+    assert(jobs == 0, s"flooring a typed grouped frame ran $jobs jobs")
+  }
+
+  test("P1 Par.both rethrows a failed lane's error and cancels its sibling's running job") {
+    val sc = spark.sparkContext
+    val group = s"par-spec-${java.util.UUID.randomUUID()}"
+    val t0 = System.nanoTime
+    val e = intercept[IllegalStateException] {
+      Par.both(
+        {
+          // fail once lane B's long job is running
+          while (sc.statusTracker.getJobIdsForGroup(group).isEmpty) Thread.sleep(10)
+          throw new IllegalStateException("lane A failed")
+        },
+        {
+          sc.setJobGroup(group, "a long lane")
+          sc.parallelize(Seq(1), 1).map { x =>
+            val ctx = org.apache.spark.TaskContext.get()
+            val end = System.currentTimeMillis + 60000
+            while (!ctx.isInterrupted() && System.currentTimeMillis < end) Thread.sleep(20)
+            x
+          }.collect()
+        })
+    }
+    assert(e.getMessage == "lane A failed")
+    val waited = (System.nanoTime - t0) / 1e9
+    assert(waited < 30, s"Par.both returned after $waited s")
+    org.apache.spark.graftbridge.ListenerBridge.flush(sc)
+    val active = sc.statusTracker.getActiveJobIds.toSet
+    val laneJobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(laneJobs.nonEmpty && laneJobs.forall(id => !active.contains(id)),
+      s"lane B's jobs ${laneJobs.toSeq} still active")
+  }
+
+  test("P2 Par.both lanes run under the caller's local properties") {
+    val sc = spark.sparkContext
+    val ((n1, n2), jobs) = jobsIn(Par.both(
+      sc.parallelize(1 to 10, 2).count(), sc.parallelize(1 to 5, 1).count()))
+    assert((n1, n2) == (10L, 5L))
+    assert(jobs == 2, s"jobsIn saw $jobs of the lanes' 2 jobs")
+  }
 }

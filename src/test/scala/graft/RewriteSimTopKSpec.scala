@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.analytics.Similarity
-import graft.functions.GraftExtensions
 import graft.plans.RewriteSimTopK
 import graft.sources.Tables
 
@@ -16,8 +15,6 @@ import graft.sources.Tables
   */
 class RewriteSimTopKSpec extends SparkSpec {
   import spark.implicits._
-
-  GraftExtensions.install(spark)
 
   private val K = 10
 

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GraftExtensions
 import graft.sources.Tables
 
 /** RewriteWindowTopK: the declarative row_number-over-window top-k
@@ -12,8 +11,6 @@ import graft.sources.Tables
   */
 class RewriteTopKSpec extends SparkSpec {
   import spark.implicits._
-
-  GraftExtensions.install(spark)
 
   private def ordersNn = Tables.orders(spark, sf("sf0.001"))
     .select($"o_custkey", $"o_orderkey",

@@ -7,7 +7,10 @@ import scala.jdk.CollectionConverters._
 /** Source guard for the one session factory: every `main` builds its
   * session through [[GraftSession]], so the plans the harness times
   * are the plans the library ships (its rules, its confs, its codegen
-  * cache), and hand-written config blocks cannot drift back in. */
+  * cache), and hand-written config blocks cannot drift back in. The
+  * rules themselves have one registration: injected by
+  * [[graft.functions.GraftExtensions]] when the factory builds a
+  * session, never added to a live one. */
 class SessionFactorySpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(String, String)] = {
@@ -33,5 +36,21 @@ class SessionFactorySpec extends AnyFunSuite {
     assert(mains.nonEmpty)
     val handBuilt = mains.collect { case (f, s) if !s.contains("GraftSession.") => f }
     assert(handBuilt.isEmpty, s"mains not on the factory: $handBuilt")
+  }
+
+  test("graft's extensions are injected in GraftExtensions.scala and registered once, at session build") {
+    val injectors = sources.collect {
+      case (f, s) if """inject[A-Z]\w*\(""".r.findFirstIn(s).isDefined => f }
+    assert(injectors == Seq("GraftExtensions.scala"), s"inject* calls in $injectors")
+    val registrations = sources.flatMap { case (f, s) =>
+      """withExtensions\(""".r.findAllMatchIn(s).map(_ => f) }
+    assert(registrations == Seq("GraftSession.scala"), s"withExtensions in $registrations")
+    val factory = sources.collect { case ("GraftSession.scala", s) => s }.head
+    assert(factory.contains(".withExtensions(new GraftExtensions)"))
+    Seq("spark.experimental", "createOrReplaceTempFunction", "def install",
+        "TopKPerKeyStrategy.setup").foreach { live =>
+      val hits = sources.collect { case (f, s) if s.contains(live) => f }
+      assert(hits.isEmpty, s"live-session registration '$live' in $hits")
+    }
   }
 }
