@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.functions.GraftExtensions
+import graft.sinks.{GraftLocalFileSystem, GraftLocalFs}
 
 /** Canonical session factory: the configuration every graft
   * deployment wants, sized by a cores hint instead of Spark's
@@ -43,6 +44,10 @@ object GraftSession {
       // + Tables.events normalizes to micros
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // local files without a chmod/readlink child process per file
+      // (graft.sinks.GraftRawLocalFileSystem)
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
       // graft's rules, strategy and SQL functions (CollectSort,
       // MetadataCount, the top-k rewrites, vec_dot, ...)
       .withExtensions(new GraftExtensions)

@@ -22,10 +22,14 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** J1: keep rows of `fresh` whose key is absent from `existingKeys`. */
+  /** J1: keep rows of `fresh` whose key is absent from `existingKeys`.
+    * No `distinct` on the key side: a left-anti join only tests
+    * existence, so duplicate build keys cannot change the result, and
+    * a distinct would cost a shuffle stage and a second job on every
+    * ingest commit. The key side is broadcast; for a key set too
+    * large to broadcast use [[bloomAntiJoinKeys]]. */
   def antiJoinKeys(fresh: DataFrame, existingKeys: DataFrame, key: String): DataFrame =
-    fresh.join(
-      broadcast(existingKeys.select(key).distinct()), Seq(key), "left_anti")
+    fresh.join(broadcast(existingKeys.select(key)), Seq(key), "left_anti")
 
   /** J2: anti-join on a composite key; broadcast left to Catalyst. */
   def antiJoinComposite(fresh: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =

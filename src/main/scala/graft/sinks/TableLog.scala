@@ -1473,7 +1473,8 @@ object TableLog {
     * because 'D'-then-restart interleavings are NOT idempotent
     * without the ledger. A batch whose changes are a stats-provable
     * no-op still publishes a txns-only DELTA commit (zero files —
-    * the ledger must advance or the replay check never clears). */
+    * the ledger must advance or the replay check never clears); when
+    * none of its changes upserts, no data file is written for it. */
   def mergeStreamBatch(spark: SparkSession, table: String, changes: DataFrame,
                        keyCol: String, seqCol: String, opCol: String,
                        appId: String, batchId: Long): Option[Long] = {
@@ -1504,12 +1505,19 @@ object TableLog {
   private def mergeImpl(spark: SparkSession, table: String, changes: DataFrame,
                         keyCol: String, seqCol: String, opCol: String,
                         txn: Option[(String, Long)]): Option[Long] = {
-    import org.apache.spark.sql.functions.{col, lit, max, min}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, max, min}
     lazy val ch = changes.localCheckpoint(true)
-    // the change-key domain as a pruning predicate; None = no non-null
+    // ONE probe of the changelog: its distinct keys (null too), each
+    // with whether any of its changes is not a 'D' (an upsert)
+    lazy val probe = ch.groupBy(col(keyCol))
+      .agg(max(coalesce(col(opCol) =!= lit("D"), lit(true))))
+      .limit(MERGE_KEY_INLINE_CAP + 2).collect()
+    // the change-key domain as a pruning predicate; empty = no non-null
     // keys exist, so nothing in the table can match any change
-    lazy val someKeys = ch.select(col(keyCol)).where(col(keyCol).isNotNull)
-      .distinct().limit(MERGE_KEY_INLINE_CAP + 1).collect().map(_.get(0)).toSeq
+    lazy val someKeys = probe.map(_.get(0)).filter(_ != null).toSeq
+    // every key was probed and none upserts: the fold inserts no row
+    lazy val deletesOnly =
+      probe.length <= MERGE_KEY_INLINE_CAP + 1 && probe.forall(!_.getBoolean(1))
     /** The TOUCH SET for snapshot `m`. Above the inline cap the
       * domain is first CLIPPED to the table's committed key range
       * ([[statsKeyRange]]): the canonical nightly CDC batch is
@@ -1613,7 +1621,12 @@ object TableLog {
           val applied = graft.ops.Cdc.applyChangelog(
               base, ch, keyCol, seqCol, opCol, payloadCols)
             .select(tableSchema.fieldNames.map(col).toIndexedSeq: _*)
-          val written = writeData(applied, table)
+          val written =
+            // stats prove no table row matches and no change upserts:
+            // the apply has no row, so skip writing (and dropping) an empty file
+            if (touched.isEmpty && deletesOnly)
+              (Seq.empty[String], Map.empty[String, TableStats.FileStats])
+            else writeData(applied, table)
           // post-apply rows must satisfy the contract (carried rows pass
           // by induction; the scan is touched-sized) — checked against
           // the WRITTEN files, the enforceConstraintsOnFiles contract

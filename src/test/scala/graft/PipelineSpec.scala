@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.pipeline.{RestaurantPipeline, ReviewPipeline}
-import graft.sinks.HttpSink
+import graft.sinks.{HttpSink, TableLog}
 
 /** End-to-end pipeline stages on reference-shaped fixtures (§3.1/§3.3)
   * plus the HTTP delivery sink with an injected transport.
@@ -44,6 +44,21 @@ class PipelineSpec extends SparkSpec {
     val known = withId.filter($"author" === "B").select("id")
     val fresh = ReviewPipeline.newReviews(crawled, known)  // ST2 batch twin
     assert(fresh.count() == 1 && fresh.collect().head.getAs[String]("author") == "A")
+  }
+
+  test("§3.3 ingest commit: newReviews + appendStreamBatch into a TableLog runs 3 jobs") {
+    def crawl(ks: Range) = ks.map(k => ("31238198", s"author$k", s"review $k", "7.25.금"))
+      .toDF("place_id", "author", "content", "visit_date")
+    val t = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    TableLog.append(ReviewPipeline.withId(crawl(0 until 4)), t)
+    // the anti-join's key side is broadcast as is: no distinct job
+    val (v, jobs) = jobsIn(TableLog.appendStreamBatch(
+      ReviewPipeline.newReviews(crawl(2 until 6), TableLog.read(spark, t).select("id")),
+      t, "ingest", 0L))
+    assert(v.contains(2L))
+    assert(jobs == 3, s"one ingest commit ran $jobs jobs")
+    assert(TableLog.read(spark, t).select("author").as[String].collect().sorted.toSeq ==
+      (0 until 6).map(k => s"author$k"))
   }
 
   test("D stage: limit-10 + API payload projection + delivery metrics") {

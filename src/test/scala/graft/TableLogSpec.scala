@@ -1418,6 +1418,25 @@ class TableLogSpec extends SparkSpec {
       "m2", 0L).contains(4L))
   }
 
+  test("a streaming merge batch that only deletes absent keys writes no data file") {
+    val t = tmpTable()
+    TableLog.append(batch(0 until 4), t)
+    def dataFiles(): Long =
+      Files.walk(java.nio.file.Paths.get(t)).filter(_.toString.endsWith(".parquet")).count()
+    val before = dataFiles()
+    val noop = Seq((-99L, 1L, "D", null.asInstanceOf[String]), (-98L, 2L, "D", null))
+      .toDF("id", "seq", "op", "payload")
+    // pin the changelog + probe its keys; no write, no empty-file delete
+    val (v, jobs) = jobsIn(TableLog.mergeStreamBatch(spark, t, noop, "id", "seq", "op",
+      "m1", 0L))
+    assert(v.contains(2L))
+    assert(jobs == 3, s"a deletes-only no-op batch ran $jobs jobs")
+    assert(dataFiles() == before)
+    assert(ids(TableLog.read(spark, t)) == (0L until 4L))
+    // the ledger advanced: its replay publishes nothing
+    assert(TableLog.mergeStreamBatch(spark, t, noop, "id", "seq", "op", "m1", 0L).isEmpty)
+  }
+
   test("stream → upsertSink: a CDC hop maintains a serving table across restarts, exactly once") {
     val src = tmpTable()
     val serve = tmpTable()
