@@ -125,125 +125,6 @@ object Bench {
                                ecp: Double, fw: Double, sw: Double,
                                sc: Double, jit: Long, inMb: Long)
 
-  /** Bench-only spellings with no DuckDB-oracled gate entry: the
-    * production variants whose POINT is to not enumerate the answer a
-    * gate query must hash (capped fuses with the reconciliation arm
-    * off). Named x_* so SPARK_GRAFT_ONLY selects them explicitly and
-    * a plain full-suite run (which matches every name) stays the
-    * gate-backed 131; they exist so SCALING.md's isolated 10× runs go
-    * through the same timing/calibration/detail machinery as
-    * everything else instead of ad-hoc harnesses. */
-  private val extraProbes: Seq[graft.queries.Q] = Seq(
-    graft.queries.Q.noOracle("x_phash_fuse") { (s, d) =>
-      import graft.multimodal.Multimodal
-      Multimodal.phashNearDupPairsCapped(
-        Multimodal.perceptualHashes(
-          Multimodal.syntheticPngClasses(graft.sources.Tables.documents(s, d))),
-        6, 2, includeOverflow = false)
-    },
-    // store-served IVF-PQ retrieve (q154's serve path priced alone):
-    // the per-dir store memo builds on the first repeat; best-of-N
-    // keeps the store-hit run — the nightly-serve figure
-    graft.queries.Q.noOracle("x_ivfpq_serve") { (s, d) =>
-      graft.queries.SimilarityQueries.ivfPqServeFrame(s, d)
-    },
-    // the RewriteSimTopK trade, measured where it bites: a CLUSTERED
-    // 400k-vector / 64-cluster corpus (the gate embeddings are
-    // near-isotropic — q98's frontier — so the gate can't show the
-    // win). x_simbrute_clustered = the plan users write;
-    // x_simserve_clustered = the plan the rewrite substitutes
-    // (store-served, bound-pruned, EXACT — same rows). Measured
-    // (this boot, quiet cal): brute 2.60 s vs serve 1.51 s (1.7×);
-    // serve's compute is ~5% of brute's (pass-1 2/64 cells + the
-    // own-cell final scan) behind a ~1.3 s fixed multi-stage floor
-    // (3 broadcasts + 2 window ranks), so the ratio is the FLOOR
-    // talking and widens linearly with corpus size — at 60k vectors
-    // the same probes measured brute 0.88 / serve 1.71 (the floor
-    // exceeds brute's whole scan; the rewrite's value begins where
-    // corpora stop fitting one scan).
-    graft.queries.Q.noOracle("x_simbrute_clustered") { (s, _) =>
-      import org.apache.spark.sql.functions.col
-      val (corpus, _, _, _) = graft.queries.SimilarityQueries.clusteredFixture(s)
-      graft.analytics.Similarity.bruteForceTopK(
-        corpus.filter(col("vec_id") < 100), corpus, 10)
-    },
-    graft.queries.Q.noOracle("x_simserve_clustered") { (s, _) =>
-      import org.apache.spark.sql.functions.col
-      val (corpus, store, quant, radii) =
-        graft.queries.SimilarityQueries.clusteredFixture(s)
-      graft.analytics.Similarity.exactTopKFromStoreModel(
-        corpus.filter(col("vec_id") < 100), store, quant, radii, 10)
-    },
-    // q151's triangle body with the co-occurrence support threshold
-    // SCALED by SPARK_GRAFT_TRI_SCALE (default 1 = the gate's w>=5):
-    // on a rep-R relational corpus (tools/scale_rel_gen.py) weights
-    // grow xR, so the FIXED threshold densifies the graph toward
-    // complete (the output-bound regime q151's gate measures there)
-    // while the SCALED threshold w >= 5R keeps the graph structurally
-    // identical to 1x — isolating the pair-count stage's xR cost from
-    // the densification blow-up (the q126 relative-vs-absolute-cap
-    // lesson applied to graph support filters).
-    // exact-dedup-first ER (q206's composition) over the dir's part
-    // table AS-IS: on a rep-R scale corpus (tools/scale_rel_gen.py
-    // keeps p_name/p_brand/p_type/p_size) the representative space
-    // IS the 1× space, so the whole pipeline runs at 1× cost plus a
-    // groupBy and two label-expansion joins — the only ER spelling
-    // with a 100× row at all (SCALE100_r14 measured the direct
-    // pipeline output-bound at 10×: 137.9 s, match pairs ×116.5;
-    // 100× would be a ~64M-pair output).
-    graft.queries.Q.noOracle("x_er_dedupfirst") { (s, d) =>
-      import org.apache.spark.sql.functions.col
-      val p = graft.sources.Tables.part(s, d).select(col("p_partkey"),
-        col("p_brand"), col("p_name"), col("p_type"), col("p_size"))
-      graft.analytics.EntityResolution.resolveDeduped(p)
-    },
-    // conversation assembly under a user-decade: events replicated
-    // SPARK_GRAFT_SFT_SCALE× map-side with per-rep user/event-id
-    // offsets (users ×R, per-user history UNCHANGED — the corpus
-    // growth axis an event log actually has). Expect ~linear wall:
-    // the sessionize window is per-user (constant size), every other
-    // stage is a partial-agged shuffle of ×R rows.
-    graft.queries.Q.noOracle("x_sft_scale") { (s, d) =>
-      import org.apache.spark.sql.functions.{array, col, explode, lit}
-      val r = sys.env.getOrElse("SPARK_GRAFT_SFT_SCALE", "1").toInt
-      // id-bound assert (r15 ADVICE): the per-rep offsets below would
-      // silently MERGE users/events across replicas if real ids ever
-      // reached them, bending the "per-user history unchanged" axis
-      val ev0 = graft.sources.Tables.events(s, d)
-      if (r > 1) {
-        import org.apache.spark.sql.functions.max
-        val mx = ev0.agg(max(col("user_id")).cast("long"),
-          max(col("event_id")).cast("long")).first()
-        require(mx.getLong(0) < 1000000L && mx.getLong(1) < 1000000000L,
-          s"x_sft_scale offsets collide: max user_id=${mx.getLong(0)} " +
-            s"(cap 1e6), max event_id=${mx.getLong(1)} (cap 1e9)")
-      }
-      val ev = ev0
-        .select(explode(array((0 until r).map(lit): _*)).as("rep"),
-          col("event_id"), col("ts"), col("user_id"), col("event_type"))
-        .select(
-          (col("event_id") + col("rep").cast("long") * 1000000000L).as("event_id"),
-          col("ts"),
-          (col("user_id") + col("rep").cast("long") * 1000000L).as("user_id"),
-          col("event_type"))
-      graft.analytics.Assembly.conversations(ev)
-        .groupBy().count() // force the full pipeline, output one row
-    },
-    graft.queries.Q.noOracle("x_tri_relthresh") { (s, d) =>
-      import org.apache.spark.sql.functions.{col, countDistinct}
-      val thr = 5L * sys.env.getOrElse("SPARK_GRAFT_TRI_SCALE", "1").toLong
-      val li = graft.sources.Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_suppkey") < col("b.l_suppkey"))
-        .groupBy(col("a.l_suppkey").as("u"), col("b.l_suppkey").as("v"))
-        .agg(countDistinct(col("a.l_orderkey")).as("w"))
-      graft.ops.Graph.triangleCounts(
-          pairs.filter(col("w") >= thr).select(col("u"), col("v")))
-        .orderBy("node")
-    })
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -252,8 +133,7 @@ object Bench {
     // Optional comma-separated substring filter for quick iteration.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val selected = SparkEntry.allQueries.filter(q =>
-      only.forall(_.exists(q.name.contains))) ++
-      extraProbes.filter(q => only.exists(_.exists(q.name.contains)))
+      only.forall(_.exists(q.name.contains)))
     // Untimed warmup at the smallest sf: JIT + whole-stage-codegen
     // compilation for the exact plan shapes being measured. Derived
     // from the measured dir (sibling sf0.001, else the dir itself) so
@@ -368,23 +248,19 @@ object Bench {
     // best-of-N per query: the steady figure the totals and stdout
     // line report; the full run spread rides in the detail file
     val bests = results.map { case (k, runs, _, _) => (k, runs.minBy(_.sec)) }
-    // x_* probes keep two segments ("x_ivfpq", "x_phash") — a bare
-    // "x" would collide when several probes are selected together
     // 2 decimals + basename sf: the one-line report must survive the
     // driver's 2000-char stdout tail buffer — at 160 queries the
     // 3-decimal spelling overflows it and the driver loses the line's
     // head (r9's BENCH artifact has parsed:null for exactly this
     // reason). Millisecond precision rides in the detail file.
     val qs = bests.map { case (k, best) =>
-      // One-liner keys are the bare query NUMBER ("q163_…" → "163";
-      // x_* probes keep their two-segment name — they only appear in
-      // filtered runs): the q prefix cost 168 chars of the driver's
-      // 2000-char tail at 168 queries, the difference between a
-      // whole-line JSON parse and the r9 parsed:null truncation.
+      // One-liner keys are the bare query NUMBER ("q163_…" → "163"):
+      // the q prefix cost 168 chars of the 2000-char stdout tail at
+      // 168 queries, the difference between a whole-line JSON parse
+      // and the r9 parsed:null truncation.
       // bench_detail.json keys stay FULL query names — the mapping
       // is NNN ↔ qNNN_*.
-      val short = if (k.startsWith("x_")) k.split('_').take(2).mkString("_")
-        else k.split('_').head.stripPrefix("q")
+      val short = k.split('_').head.stripPrefix("q")
       // Values are INTEGER CENTISECONDS (seconds × 100, rounded;
       // decode as value/100 — the `"u":"k:cs"` marker on the line
       // says so): 163:49 = 0.49 s. Millisecond precision stays in

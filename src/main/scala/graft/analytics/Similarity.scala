@@ -421,15 +421,6 @@ object Similarity {
     * assignLargeK's scaladoc). */
   val MAX_INLINE_DOUBLES: Long = 8192L
 
-  /** Scala twin of DuckRound(·, 6) — the same three IEEE ops the
-    * expression's nullSafeEval/codegen perform (scale, round half
-    * away from zero, unscale), so [[assignLargeK]]'s in-loop cosine
-    * rounds bit-identically to the inlined/expression paths. */
-  private def duckRound6(x: Double): Double = {
-    val s = x * 1e6
-    (if (s >= 0) math.floor(s + 0.5) else math.ceil(s - 0.5)) / 1e6
-  }
-
   /** The LARGE-QUANTIZER argmax assignment — bit-identical semantics
     * to nearestCellExpr (rounded cosine desc, null→-2.0 sentinel,
     * ties → lowest cid) for models too large to inline: the collected
@@ -446,9 +437,10 @@ object Similarity {
     * 200k vectors = 320M wide rows spilled past 77 GB of local disk
     * and killed the job. Dot products here accumulate left-to-right
     * with float→double per element — exactly VecDot's nullSafeEval
-    * loop — and a length-mismatched centroid degrades to the same
-    * -2.0 sentinel the join path's null dot produced. AnalyticsSpec
-    * pins the inline≡large-k identity. */
+    * loop — the cosine rounds through DuckRound's own scalar
+    * (`DuckRoundExpr.round6`), and a length-mismatched centroid
+    * degrades to the same -2.0 sentinel the join path's null dot
+    * produced. AnalyticsSpec pins the inline≡large-k identity. */
   private def assignLargeK(vecs: DataFrame,
                            quant: Array[(Long, Array[Double], Double)]): DataFrame = {
     val sess = vecs.sparkSession
@@ -475,7 +467,7 @@ object Similarity {
                 var d = 0.0
                 var j = 0
                 while (j < cv.length) { d += v(j).toDouble * cv(j); j += 1 }
-                duckRound6(d / den)
+                graft.functions.DuckRoundExpr.round6(d / den)
               }
             if (sim > bestSim || (sim == bestSim && cid < bestCid)) {
               bestSim = sim

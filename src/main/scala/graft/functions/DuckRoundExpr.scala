@@ -29,10 +29,8 @@ case class DuckRound(child: Expression, scale: Int) extends UnaryExpression {
 
   private val p: Double = math.pow(10, scale)
 
-  override def nullSafeEval(v: Any): Any = {
-    val s = v.asInstanceOf[Double] * p
-    (if (s >= 0) math.floor(s + 0.5) else math.ceil(s - 0.5)) / p
-  }
+  override def nullSafeEval(v: Any): Any =
+    DuckRoundExpr.roundScaled(v.asInstanceOf[Double], p)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
@@ -50,4 +48,17 @@ case class DuckRound(child: Expression, scale: Int) extends UnaryExpression {
 object DuckRoundExpr {
   def duck_round(c: Column, scale: Int): Column =
     ColumnBridge.column(DuckRound(ColumnBridge.expression(c), scale))
+
+  /** The scalar rounding every Scala twin of [[DuckRound]] uses: the
+    * three IEEE ops of its nullSafeEval and generated code (scale by
+    * `p` = 10^scale, round half away from zero, unscale). */
+  private[graft] def roundScaled(x: Double, p: Double): Double = {
+    val s = x * p
+    (if (s >= 0) math.floor(s + 0.5) else math.ceil(s - 0.5)) / p
+  }
+
+  private val P6 = math.pow(10, 6) // DuckRound(·, 6)'s own `p`
+
+  /** `roundScaled` at scale 6 — the similarity rounding. */
+  private[graft] def round6(x: Double): Double = roundScaled(x, P6)
 }

@@ -225,13 +225,12 @@ object DedupQueries {
       // localCheckpoint stand-in measured a corpus-sized block-manager
       // write per run — the r11 driver stall's epicenter class — and
       // was not the production plan). Built + committed once per
-      // (session, dir) by bandStoreTable (the x_ivfpq_serve
-      // convention), so the measured runs read the PINNED version
-      // from parquet and probe it with the delta: the store-served
-      // plan a real nightly executes. shingle frames of the split
-      // sides derive from the cached full-corpus frame by doc_id
-      // predicate (shingle rows carry doc_id, so
-      // shingleSet(filter(docs)) == filter(shingleSet(docs)))
+      // dir by bandStoreTable (Scratch.storeMemo), so the measured
+      // runs read the PINNED version from parquet and probe it with
+      // the delta: the store-served plan a real nightly executes.
+      // shingle frames of the split sides derive from the cached
+      // full-corpus frame by doc_id predicate (shingle rows carry
+      // doc_id, so shingleSet(filter(docs)) == filter(shingleSet(docs)))
       val shIngested = shingleSetOf(s, d).filter(col("doc_id") % 5 =!= 0)
       val (tbl, v1) = bandStoreTable(s, d)
       val store = graft.sinks.TableLog.read(s, tbl, Some(v1))
@@ -831,28 +830,21 @@ object DedupQueries {
   /** q97's band store as a DURABLE TableLog table — the versioned
     * nightly artifact (round-12 judge item: the O(Δ) stores' "persist
     * nightly, probe tomorrow" contract needs atomically-versioned
-    * storage, which the repo now has). Built ONCE per dir (the
-    * x_ivfpq_serve memo convention): v1 = `append` of the ingested
-    * corpus's band rows; measured runs read the PINNED v1 back from
-    * parquet — the store-served plan. The full lifecycle (nightly
-    * delta `append`, keeper `compact`-style rewrite, pinned re-dedup
-    * across crashed/racing writers) is AnalyticsSpec's
-    * TableLog-store test; the gate pins the serve identity. Scratch
-    * manages the tree (per-dir tag: sf0.001 warmup and sf0.1 measure
-    * coexist in one process). */
-  private val bandStoreMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]
-  private def bandStoreTable(s: org.apache.spark.sql.SparkSession,
-                             d: String): (String, Long) =
-    bandStoreMemo.computeIfAbsent(d, _ => {
-      val tag = "graft-q97-store-" + new java.io.File(d).getName
-      val tbl = Scratch.fresh(tag).toString
+    * storage, which the repo now has). Built ONCE per dir
+    * (Scratch.storeMemo): v1 = `append` of the ingested corpus's band
+    * rows; measured runs read the PINNED v1 back from parquet — the
+    * store-served plan. The full lifecycle (nightly delta `append`,
+    * keeper `compact`-style rewrite, pinned re-dedup across
+    * crashed/racing writers) is AnalyticsSpec's TableLog-store test;
+    * the gate pins the serve identity. */
+  private val bandStoreTable = Scratch.storeMemo("graft-q97-store-") {
+    (s, d, tbl) =>
       val ingested = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
       val shIngested = shingleSetOf(s, d).filter(col("doc_id") % 5 =!= 0)
       val v1 = graft.sinks.TableLog.append(
         DedupOps.minhashBandStore(ingested, Some(shIngested)), tbl)
       (tbl, v1)
-    })
+  }
 
   /** Session-cached LSH-verified near-dup pair list (threshold 0.6) —
     * the dedup pipeline's persisted intermediate: a nightly run

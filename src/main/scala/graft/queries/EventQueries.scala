@@ -54,23 +54,18 @@ object EventQueries {
   private def isDelta(cut: Long): org.apache.spark.sql.Column =
     unix_micros(col("ts")) >= cut && col("user_id") % 7 === 0
 
-  /** Build-once-serve-on-repeat conversation store (the
-    * bandStoreTable memo pattern, Scratch-tagged per dir): the
-    * persisted q207 output over everything EXCEPT the delta. */
-  private val convoStoreMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def convoStoreTable(s: org.apache.spark.sql.SparkSession,
-                              d: String): String =
-    convoStoreMemo.computeIfAbsent(d, _ => {
-      val tbl = Scratch.fresh(
-        "graft-q209-store-" + new java.io.File(d).getName).toString
+  /** Build-once-serve-on-repeat conversation store
+    * (Scratch.storeMemo): the persisted q207 output over everything
+    * EXCEPT the delta. */
+  private val convoStoreTable = Scratch.storeMemo("graft-q209-store-") {
+    (s, d, tbl) =>
       val cut = deltaCutUs(s, d)
       val preDelta = Tables.events(s, d).filter(!isDelta(cut))
       graft.sinks.TableLog.append(
         graft.analytics.Assembly.conversations(preDelta)
           .select("user_id", "session_id", "n_turns", "fp"), tbl)
       tbl
-    })
+  }
 
   val queries: Seq[Q] = Seq(
 

@@ -12,20 +12,14 @@ import graft.ops.Exact
   */
 object MiscQueries {
 
-  private val DEC = "DECIMAL(18,2)"
-  private def dsum(c: String) = s"CAST(sum(CAST($c AS $DEC)) AS DOUBLE)"
+  import Q.dsum
 
   /** q167's stored match-pair list as a durable TableLog table —
-    * built + committed once per dir (the q97/q149 memo convention);
-    * the measured run reads the pinned version. */
-  private val erStoreMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]
-  private def erPairStore(s: org.apache.spark.sql.SparkSession,
-                          d: String): (String, Long) =
-    erStoreMemo.computeIfAbsent(d, _ => {
+    * built + committed once per dir (Scratch.storeMemo); the measured
+    * run reads the pinned version. */
+  private val erPairStore = Scratch.storeMemo("graft-q167-store-") {
+    (s, d, tbl) =>
       import graft.analytics.EntityResolution
-      val tag = "graft-q167-store-" + new java.io.File(d).getName
-      val tbl = Scratch.fresh(tag).toString
       val base = Tables.part(s, d)
         .select(col("p_partkey"), col("p_brand"), col("p_name"),
           col("p_type"), col("p_size"))
@@ -33,7 +27,7 @@ object MiscQueries {
       val v1 = graft.sinks.TableLog.append(
         EntityResolution.matchPairs(base, base), tbl)
       (tbl, v1)
-    })
+  }
 
   /** DuckDB spelling of `EntityResolution.block4Col` (the name's
     * middle section — pass-4 blocking key, round 13). Anchored

@@ -14,8 +14,7 @@ import graft.ops.Exact
   */
 object OlapQueries {
 
-  private val DEC = "DECIMAL(18,2)"
-  private def dsum(c: String) = s"CAST(sum(CAST($c AS $DEC)) AS DOUBLE)"
+  import Q.{DEC, dsum}
 
   /** Shared pre-aggregate for the grouping-set family: lineitem
     * collapsed to one partial (count, decimal sum) row per

@@ -21,6 +21,9 @@ final case class Q(
 object Q {
   def apply(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, Some(oracle), run)
-  def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, None, run)
+
+  /** Oracle-side decimal type of the 2-decimal money columns. */
+  private[queries] val DEC = "DECIMAL(18,2)"
+  /** Oracle-side exact sum of a 2-decimal double column (see ops.Exact). */
+  private[queries] def dsum(c: String) = s"CAST(sum(CAST($c AS $DEC)) AS DOUBLE)"
 }

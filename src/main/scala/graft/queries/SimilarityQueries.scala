@@ -25,17 +25,16 @@ object SimilarityQueries {
   private val K_ARM = 20
   private val K_OUT = 10
 
-  /** Prebuilt IVF-PQ stores, memoized per sf dir — the bench-only
-    * serve-path fixture behind `x_ivfpq_serve` (Bench.extraProbes):
-    * the gate query q154 necessarily pays training + store BUILD to
-    * prove the identity; this memo is what lets the probe price the
-    * nightly SERVE alone (first repeat builds, best-of-N keeps the
-    * store-hit run — the dedup-family cache pattern). Models train on
-    * the full corpus here: the production store covers everything. */
+  /** Prebuilt IVF-PQ stores, memoized per sf dir: centroids, PQ
+    * codebooks, the coarse-assignment store and the code store, each
+    * trained on the full corpus (the production store covers
+    * everything). q178 serves from the coarse store; the first run per
+    * dir builds, so best-of-N keeps the store-hit run — the
+    * dedup-family cache pattern. */
   private val storeMemo =
     new java.util.concurrent.ConcurrentHashMap[String,
       (DataFrame, Array[(Int, Int, Array[Double])], DataFrame, DataFrame)]
-  def ivfPqStores(s: SparkSession, d: String):
+  private def ivfPqStores(s: SparkSession, d: String):
       (DataFrame, Array[(Int, Int, Array[Double])], DataFrame, DataFrame) =
     storeMemo.computeIfAbsent(d, _ => {
       val e = Tables.embeddings(s, d)
@@ -44,46 +43,6 @@ object SimilarityQueries {
       val coarse = Similarity.kmeansAssign(e, cent).localCheckpoint(true)
       val codes = Similarity.pqEncode(e, books).localCheckpoint(true)
       (cent, books, coarse, codes)
-    })
-
-  /** The store-served retrieve over [[ivfPqStores]] — the probe body. */
-  def ivfPqServeFrame(s: SparkSession, d: String): DataFrame = {
-    val (cent, books, coarse, codes) = ivfPqStores(s, d)
-    Similarity.ivfPqRerankTopKFromStore(
-        Tables.embeddings(s, d).filter(col("vec_id") < N_QUERIES),
-        coarse, codes, cent, books, TOP_K, PQ_RERANK, nProbe = 2)
-      .orderBy("qid", "rnk")
-  }
-
-  /** Deterministic CLUSTERED corpus fixture for the
-    * `x_simbrute_clustered` / `x_simserve_clustered` probes
-    * (Bench.extraProbes): 400,000 64-dim vectors in 64 tight
-    * axis-aligned balls (cluster c = vec_id % 64 spikes dim c at 10,
-    * every dim carries a small seeded jitter) — the regime where
-    * RewriteSimTopK's bound pruning bites, which the near-isotropic
-    * gate embeddings deliberately cannot show (q98's frontier).
-    * Memoized per session with the store artifacts (centroids trained
-    * once, radii collected once) so best-of-N prices the SERVE, not
-    * the nightly build — the x_ivfpq_serve convention. */
-  private val clusterMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (DataFrame, DataFrame, Array[(Long, Array[Double], Double)], Map[Long, Double])]
-  def clusteredFixture(s: SparkSession):
-      (DataFrame, DataFrame, Array[(Long, Array[Double], Double)], Map[Long, Double]) =
-    clusterMemo.computeIfAbsent("fix", _ => {
-      val jitter = (id: org.apache.spark.sql.Column, j: org.apache.spark.sql.Column) =>
-        ((id * lit(1315423911L) + j.cast("long") * lit(2654435761L)) % 1000L)
-          .cast("double") / lit(1000.0) * lit(0.05)
-      val corpus = s.range(400000).select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(63)), j =>
-            (jitter(col("id"), j) +
-              when(j.cast("long") === col("id") % 64L, lit(10.0))
-                .otherwise(lit(0.0))).cast("float")).as("embedding"))
-        .localCheckpoint(true)
-      val cent = Similarity.kmeansCentroids(corpus, 64, 1).localCheckpoint(true)
-      val store = Similarity.kmeansAssign(corpus, cent).localCheckpoint(true)
-      (corpus, store, Similarity.collectModel(cent),
-        Similarity.cellRadii(store, cent))
     })
 
   private val normCtes =

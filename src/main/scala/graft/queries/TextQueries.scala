@@ -17,20 +17,15 @@ object TextQueries {
 
   /** q149's stored inverted index as a DURABLE TableLog table +
     * the ingested batch's (nDocs, nTokens) — built and committed ONCE
-    * per dir (the x_ivfpq_serve memo convention): v1 = `append` of
-    * the 80% batch's postings; measured runs read the PINNED v1 from
-    * parquet — the term-partitioned-store-served plan, replacing the
+    * per dir (Scratch.storeMemo): v1 = `append` of the 80% batch's
+    * postings; measured runs read the PINNED v1 from parquet — the
+    * term-partitioned-store-served plan, replacing the
     * round-11-flagged eager localCheckpoint stand-in (a corpus-sized
     * block-manager write inside the measured path). Lifecycle
     * (append/compact/crash/race) is spec'd on the q97 store —
     * AnalyticsSpec — one mechanism, one proof. */
-  private val bm25StoreMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long, Long, Long)]
-  private def bm25IndexStore(s: org.apache.spark.sql.SparkSession,
-                             d: String): (String, Long, Long, Long) =
-    bm25StoreMemo.computeIfAbsent(d, _ => {
-      val tag = "graft-q149-index-" + new java.io.File(d).getName
-      val tbl = Scratch.fresh(tag).toString
+  private val bm25IndexStore = Scratch.storeMemo("graft-q149-index-") {
+    (s, d, tbl) =>
       val ingested = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
       // TERM-partitioned layout: range-partition the postings by term
       // before the commit so each data file's footer stats carry a
@@ -46,7 +41,7 @@ object TextQueries {
           .sortWithinPartitions("term"), tbl)
       val (n1, t1) = graft.analytics.Retrieval.corpusTokenStats(ingested)
       (tbl, v1, n1, t1)
-    })
+  }
 
   /** DuckDB spelling of "integer value of sha-256 hex chars
     * [start, start+len)" — the portable hash-bucket idiom (DuckDB 1.0

@@ -28,9 +28,9 @@ import org.apache.spark.sql.catalyst.expressions._
   * Stats kinds: integral (`l`), floating (`d`), UTF-8 string (`s`).
   * String ordering compares UTF-8 BYTES unsigned — parquet's binary
   * stats order, NOT java String's UTF-16 order (they disagree for
-  * supplementary-plane vs private-use chars — the CdcStream.utf8Cmp
-  * lesson applied to skipping: a UTF-16 compare could prune a file
-  * that matches).
+  * supplementary-plane vs private-use chars — the `utf8Cmp` lesson
+  * from CdcStream's tiebreak, applied to skipping: a UTF-16 compare
+  * could prune a file that matches).
   */
 object TableStats {
 
@@ -148,8 +148,18 @@ object TableStats {
 
   // ---------------------------------------------------------------- pruning
 
-  /** Unsigned UTF-8 byte compare (parquet's binary stats order). */
-  private def utf8Cmp(a: String, b: String): Int = {
+  /** Unsigned UTF-8 byte compare: parquet's binary stats order, and
+    * the order Spark's max(struct(...)) applies to StringType
+    * (UTF8String binary), which CdcStream's latest-change election
+    * matches. Scala's Ordering.String is UTF-16 code-unit order and
+    * DISAGREES for supplementary-plane vs private-use characters.
+    * Null orders below any string, as in Spark's struct field
+    * comparison (the batch election tolerates null op/payload, so
+    * the stream must too). A byte loop, not an allocating compare:
+    * `lte`/`mayContain` run it per file on every pruned read. */
+  private[graft] def utf8Cmp(a: String, b: String): Int = {
+    if (a == null || b == null)
+      return java.lang.Boolean.compare(a != null, b != null)
     val x = a.getBytes(StandardCharsets.UTF_8)
     val y = b.getBytes(StandardCharsets.UTF_8)
     var i = 0

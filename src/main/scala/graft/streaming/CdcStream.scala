@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import graft.sinks.TableStats.utf8Cmp
 
 /** Streaming change-data-capture apply — `ops.Cdc.applyChangelog`
   * (q144) as a CONTINUOUS stream, completing batch/stream parity for
@@ -52,34 +53,10 @@ object CdcStream {
   def snapshotChange(key: Long, payload: String): Change =
     Change(key, Long.MinValue, "I", payload)
 
-  /** UTF-8 unsigned-byte string compare — the order Spark's
-    * max(struct(...)) applies to StringType (UTF8String binary),
-    * which the batch twin's latest-change election uses. Scala's
-    * Ordering.String is UTF-16 code-unit order and DISAGREES for
-    * supplementary-plane vs private-use characters, so using it here
-    * would let duplicate-seq ties resolve differently stream vs
-    * batch. */
-  private def utf8Cmp(a: String, b: String): Int = {
-    // Null guard matching Spark's struct field comparison (null
-    // orders below any string): the batch twin's max(struct(...))
-    // election tolerates null op/payload, so the stream must too —
-    // a raw getBytes here would NPE and break the stream≡batch
-    // contract on null-payload changes.
-    if (a == null || b == null)
-      return java.lang.Boolean.compare(a != null, b != null)
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    x.length - y.length
-  }
-
-  /** The batch operator's lexicographic (seq, op, payload) order. */
+  /** The batch operator's lexicographic (seq, op, payload) order,
+    * strings compared as UTF-8 bytes with nulls first
+    * ([[graft.sinks.TableStats.utf8Cmp]]): a UTF-16 compare would let
+    * duplicate-seq ties resolve differently stream vs batch. */
   private val changeOrd: Ordering[Change] = new Ordering[Change] {
     def compare(a: Change, b: Change): Int = {
       val s = java.lang.Long.compare(a.seq, b.seq)

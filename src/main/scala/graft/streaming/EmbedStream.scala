@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.analytics.Similarity
+import graft.functions.DuckRoundExpr
 
 /** Streaming embedding near-dup detection — the VECTOR twin of
   * [[DedupStream]]: the q102 incremental bucket-store contract as a
@@ -78,14 +79,12 @@ object EmbedStream {
     b
   }
 
-  /** Exact rounded cosine in plain Scala — bit-equal to the batch
-    * verify expression `duckRound(vec_dot(a,b)/(norm(a)*norm(b)), 6)`:
-    * left-to-right double folds (VecExpressions.nullSafeEval), IEEE
-    * division, then DuckDB's multiply→half-away-from-zero→divide
-    * rounding (DuckRound.nullSafeEval). Zero-norm or length-mismatched
-    * inputs yield NaN, which fails every ≥ threshold test — the same
-    * fate the batch null/NaN rows meet at the filter. */
-  def simOf(a: Array[Float], b: Array[Float]): Double = {
+  /** The one dot/norm loop behind both streaming twins' rounded
+    * cosine (this `simOf` and SemanticStream's): left-to-right double
+    * folds of a·b, |a|² and |b|² (VecExpressions.nullSafeEval), handed
+    * to `sim` as (a·b, |a|·|b|). Length-mismatched inputs yield NaN. */
+  private[streaming] def cosineWith(a: Array[Float], b: Array[Float])(
+      sim: (Double, Double) => Double): Double = {
     if (a.length != b.length) return Double.NaN
     var d = 0.0
     var na = 0.0
@@ -99,9 +98,17 @@ object EmbedStream {
       nb += y * y
       i += 1
     }
-    val s = d / (math.sqrt(na) * math.sqrt(nb)) * 1e6
-    (if (s >= 0) math.floor(s + 0.5) else math.ceil(s - 0.5)) / 1e6
+    sim(d, math.sqrt(na) * math.sqrt(nb))
   }
+
+  /** Exact rounded cosine in plain Scala — bit-equal to the batch
+    * verify expression `duckRound(vec_dot(a,b)/(norm(a)*norm(b)), 6)`:
+    * the [[cosineWith]] folds, IEEE division, then DuckRound's own
+    * scalar rounding. Zero-norm or length-mismatched inputs yield
+    * NaN, which fails every ≥ threshold test — the same fate the
+    * batch null/NaN rows meet at the filter. */
+  def simOf(a: Array[Float], b: Array[Float]): Double =
+    cosineWith(a, b)((d, den) => DuckRoundExpr.round6(d / den))
 
   /** Verified near-dup pairs over a vector stream. Pairs are canonical
     * (v1 < v2), each pairs a NEW vector with a stored or same-batch

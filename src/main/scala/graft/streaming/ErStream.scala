@@ -59,7 +59,7 @@ object ErStream {
     * `levenshtein` function), so the stream's metric is batch-
     * identical BY CONSTRUCTION, codepoints and all (a hand-rolled
     * UTF-16-char DP would diverge on supplementary-plane names —
-    * the CdcStream.utf8Cmp class of bug). */
+    * the TableStats.utf8Cmp class of bug). */
   def lev(a: String, b: String): Int =
     org.apache.spark.unsafe.types.UTF8String.fromString(a)
       .levenshteinDistance(org.apache.spark.unsafe.types.UTF8String.fromString(b))

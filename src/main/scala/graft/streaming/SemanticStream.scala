@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.DuckRoundExpr
 
 /** Streaming semantic deduplication — q119's SemDeDup cell-based
   * prune as a CONTINUOUS stream, completing batch/stream parity for
@@ -63,21 +64,13 @@ object SemanticStream {
     * column's spelling). */
   final case class PruneEvent(vec_id: Long, pruned_by: Long, sim: Double)
 
-  /** DuckDB-parity rounding to 6 decimals: multiply → half away from
-    * zero → divide (the `Exact.duckRound` scalar twin EmbedStream
-    * uses). */
-  private def duckRound6(x: Double): Double = {
-    val s = x * 1e6
-    (if (s >= 0) math.floor(s + 0.5) else math.ceil(s - 0.5)) / 1e6
-  }
-
   /** Frozen-quantizer cell assignment in plain Scala — bit-equal to
     * `Similarity.kmeansAssign`'s nearestCellExpr over the SAME
     * collected tuples (argmax by rounded cosine desc then cid asc;
     * zero-norm or length-mismatched sims map to -2.0; `+ 0.0`
     * normalizes -0.0): left-to-right double folds for dot and norm,
-    * IEEE division, duckRound6. StreamingSpec pins the parity on the
-    * corpus. */
+    * IEEE division, DuckRoundExpr.round6. StreamingSpec pins the
+    * parity on the corpus. */
   def cellOf(emb: Array[Float],
              quant: Array[(Long, Array[Double], Double)]): Long = {
     require(quant.nonEmpty, "cellOf: empty quantizer")
@@ -96,7 +89,7 @@ object SemanticStream {
           var d = 0.0
           var j = 0
           while (j < cv.length) { d += emb(j).toDouble * cv(j); j += 1 }
-          duckRound6(d / den) + 0.0
+          DuckRoundExpr.round6(d / den) + 0.0
         }
       if (s > bestS || (s == bestS && cid < bestC)) { bestS = s; bestC = cid }
     }
@@ -107,23 +100,9 @@ object SemanticStream {
     * zero-norm (or length-mismatched) pairs yield NaN, which fails
     * every ≥ tau test — the scalar image of the batch NULL
     * (`when(nrm1*nrm2 =!= 0, duckRound(...) + 0.0)`). */
-  def simOf(a: Array[Float], b: Array[Float]): Double = {
-    if (a.length != b.length) return Double.NaN
-    var d = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < a.length) {
-      val x = a(i).toDouble
-      val y = b(i).toDouble
-      d += x * y
-      na += x * x
-      nb += y * y
-      i += 1
-    }
-    val den = math.sqrt(na) * math.sqrt(nb)
-    if (den == 0.0) Double.NaN else duckRound6(d / den) + 0.0
-  }
+  def simOf(a: Array[Float], b: Array[Float]): Double =
+    EmbedStream.cosineWith(a, b)((d, den) =>
+      if (den == 0.0) Double.NaN else DuckRoundExpr.round6(d / den) + 0.0)
 
   /** Prune events over a vector stream under the frozen quantizer.
     * At any instant, {ids seen} ∖ {events' vec_ids} =

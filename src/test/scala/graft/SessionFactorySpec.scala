@@ -53,4 +53,24 @@ class SessionFactorySpec extends AnyFunSuite {
       assert(hits.isEmpty, s"live-session registration '$live' in $hits")
     }
   }
+
+  private def occurrences(needle: String): Seq[String] =
+    sources.flatMap { case (f, s) =>
+      Iterator.iterate(s.indexOf(needle))(i => s.indexOf(needle, i + 1))
+        .takeWhile(_ >= 0).map(_ => f) }
+
+  test("DuckDB's scalar rounding arithmetic is spelled once, beside DuckRound") {
+    // the generated-code string spells `Math.floor($s + 0.5)`, not this
+    assert(occurrences("floor(s + 0.5)") == Seq("DuckRoundExpr.scala"))
+  }
+
+  test("the UTF-8 byte compare is defined once") {
+    assert(occurrences("def utf8Cmp(") == Seq("TableStats.scala"))
+  }
+
+  test("no src/main file reads the retired probe scale knobs") {
+    Seq("SPARK_GRAFT_SFT_SCALE", "SPARK_GRAFT_TRI_SCALE").foreach { knob =>
+      assert(occurrences(knob).isEmpty, s"$knob read in ${occurrences(knob)}")
+    }
+  }
 }
